@@ -6,16 +6,37 @@ All encode/decode is numpy-vectorized — this runs inside Arrow-batched
 ``applyInPandas`` workers over potentially millions of postings for hot
 terms, so no per-value Python loops.
 
-Block layout (one logical posting list = ordered blocks):
-  - ``doc_bytes``: varint-encoded doc gaps; first value is the gap from
-    ``first_doc`` (i.e. 0 for the first doc), so a block is decodable
-    standalone given ``first_doc``.
-  - ``tf_bytes``: varint term frequencies, same order.
-  - ``pos_bytes`` (optional): per-doc delta-encoded positions,
-    concatenated (tf values give the per-doc counts).
+Block layout (one logical posting list = ordered blocks). Six byte
+streams, all varint-coded:
+  - ``doc_bytes``: doc gaps; first value is the gap from ``first_doc``
+    (i.e. 0 for the first doc), so a block is decodable standalone
+    given ``first_doc``.
+  - ``tf_bytes``: term frequencies, one per doc, same order.
+  - ``dl_bytes``: the doc's length (token positions), one per doc —
+    norms ride with the postings so query workers score without a join.
+  - ``pos_bytes`` (None when built without positions): per-doc
+    delta-encoded positions, concatenated (tf values give the per-doc
+    counts); the delta chain restarts at every doc.
+  - ``pl_bytes`` (None unless a token filter wrote multi-position
+    tokens): one position length per occurrence, aligned with the
+    positions; None means every token spans 1.
+  - ``imp_bytes`` (None on blocks written without doc lengths):
+    quantized impacts ``[P, f_1..f_P, d_1..d_P]``, see pareto_impacts.
   - metadata: ``first_doc, last_doc, n_docs, max_tf, min_dl`` — skip +
     block-max data for WAND (bound computed at query time from
     tfnorm(max_tf, min_dl), so k1/b/avgdl stay query parameters).
+
+Docstats pseudo rows (term ``indexer.DOCSTATS_TERM``) reuse the block
+schema to carry every doc's length once per shard: up to 4096 docs per
+row, ``doc_bytes`` and ``dl_bytes`` as above, ``tf_bytes`` empty,
+``max_tf = sum_tf = min_dl = 0`` and no pos/pl/imp streams.
+
+``decode_selected`` is the one read path for all of it: every reader
+of the format hands it block rows and gets flat arrays back. It decodes
+the positions of many blocks in one pass, which is valid because a
+block boundary is always a doc boundary and the position delta chain
+restarts at every doc, so concatenated ``pos_bytes`` read as one
+buffer with the concatenated tfs.
 """
 
 from __future__ import annotations
@@ -422,3 +443,101 @@ def decode_block(first_doc: int, doc_bytes: bytes, tf_bytes: bytes,
     docs = np.cumsum(gaps) + first_doc
     tfs = varint_decode(tf_bytes, n_docs).astype(np.int64)
     return docs, tfs
+
+
+STREAMS = ("doc", "tf", "dl", "pos", "pl", "imp")
+
+
+def _run_sums(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Sums of the consecutive runs of ``counts`` values."""
+    c = np.concatenate(([0], np.cumsum(values, dtype=np.int64)))
+    ends = np.cumsum(counts)
+    return c[ends] - c[ends - counts]
+
+
+def decode_selected(pdf, rows, streams) -> dict:
+    """The block format's read path: decode ``streams`` (names from
+    STREAMS) of the block rows at positions ``rows`` of ``pdf`` — a
+    frame of block rows, or a dict of its columns as arrays (cheaper
+    for callers that decode many selections of one frame). Each stream
+    is one varint pass over the rows' concatenated buffers.
+
+    Returns flat int64 arrays in row order, for the requested streams:
+      - ``n``: postings per selected row (always);
+      - ``doc``, ``tf``, ``dl``: one value per posting;
+      - ``occ_doc``, ``pos`` ("pos") and ``plen`` ("pl"): one value per
+        occurrence; a row without ``pl_bytes`` spans 1 per occurrence;
+      - ``imp_n``, ``imp_f``, ``imp_d`` ("imp"): pareto pairs per row
+        (0 for a row without impacts) and the pairs themselves.
+    "pos" implies "doc" and "tf"; "pl" implies "tf"."""
+    want = set(streams)
+    if not want <= set(STREAMS):
+        raise ValueError(f"unknown streams {sorted(want - set(STREAMS))}")
+    if want & {"pos", "pl"}:
+        want.add("tf")
+    if "pos" in want:
+        want.add("doc")
+    rows = np.asarray(rows, dtype=np.int64)
+    n = np.asarray(pdf["n_docs"])[rows].astype(np.int64)
+    total = int(n.sum())
+    out = {"n": n}
+
+    def bufs(col):
+        return np.asarray(pdf[col], dtype=object)[rows]
+
+    def present(col):
+        """(buffers, mask) of the rows whose ``col`` is not None."""
+        if col not in pdf:
+            return [], np.zeros(len(rows), dtype=bool)
+        b = bufs(col)
+        has = np.fromiter((x is not None for x in b), bool, len(b))
+        return b[has], has
+
+    if "doc" in want:
+        gaps = varint_decode(b"".join(bufs("doc_bytes")),
+                             total).astype(np.int64)
+        acc = np.cumsum(gaps)
+        starts = np.cumsum(n) - n
+        # every block's gaps restart at its first_doc: re-anchor the
+        # running sum per block (segmented cumsum)
+        anchor = np.asarray(pdf["first_doc"])[rows].astype(np.int64) \
+            - acc[starts] + gaps[starts]
+        out["doc"] = acc + np.repeat(anchor, n)
+    for s in ("tf", "dl"):
+        if s in want:
+            out[s] = varint_decode(b"".join(bufs(f"{s}_bytes")),
+                                   total).astype(np.int64)
+    if "pos" in want:
+        pb, has = present("pos_bytes")
+        if not has.all():
+            raise ValueError("positions requested from blocks written "
+                             "without them (store_positions=False)")
+        out["occ_doc"] = np.repeat(out["doc"], out["tf"])
+        # one pass: block boundaries are doc boundaries, where the
+        # position delta chain restarts anyway
+        out["pos"] = decode_positions(b"".join(pb), out["tf"])
+    if "pl" in want:
+        occ = _run_sums(out["tf"], n)          # occurrences per row
+        plen = np.ones(int(occ.sum()), dtype=np.int64)
+        pb, has = present("pl_bytes")
+        if has.any():
+            plen[np.repeat(has, occ)] = varint_decode(
+                b"".join(pb), int(occ[has].sum())).astype(np.int64)
+        out["plen"] = plen
+    if "imp" in want:
+        ib, has = present("imp_bytes")
+        v = varint_decode(b"".join(ib)).astype(np.int64)
+        # a row holds [P, f_1..f_P, d_1..d_P]: 1 + 2P varints, counted
+        # from its bytes' terminal (high bit clear) bytes
+        cnt = _run_sums(np.frombuffer(b"".join(ib), dtype=np.uint8) < 0x80,
+                        np.fromiter((len(x) for x in ib), np.int64,
+                                    len(ib)))
+        p = (cnt - 1) // 2
+        body = np.delete(v, np.cumsum(cnt) - cnt)       # drop the heads
+        rank = np.arange(len(body)) - np.repeat(np.cumsum(2 * p) - 2 * p,
+                                                2 * p)
+        is_f = rank < np.repeat(p, 2 * p)
+        out["imp_n"] = np.zeros(len(rows), dtype=np.int64)
+        out["imp_n"][has] = p
+        out["imp_f"], out["imp_d"] = body[is_f], body[~is_f]
+    return out

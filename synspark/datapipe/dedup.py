@@ -255,8 +255,10 @@ def dedup_drop_list(df: DataFrame, shingle_k: int = 3, n_hashes: int = 8,
     shingle table feeds three branches (signatures, both join sides);
     it is persisted so the corpus-sized explode+distinct runs once, not
     three times."""
+    # null text has no content to duplicate: its md5 is null, and a
+    # null key must not group every null-text row into one window
     keyed = df.select(F.md5(F.col(text_col)).alias("dup_key"),
-                      F.col(id_col))
+                      F.col(id_col)).filter(F.col("dup_key").isNotNull())
     # min-id-survives via ONE exchange (round 6b): row_number over the
     # md5 group ordered by id — every row but the group minimum drops,
     # which is exactly the old groupBy(min)+self-join's output with one
@@ -475,6 +477,9 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3,
     than that overhead. Output is identical with or without it.
     """
     from itertools import combinations
+    if split_hot_buckets is not None and split_hot_buckets < 1:
+        raise ValueError(f"split_hot_buckets must be >= 1 (a cell "
+                         f"granule), got {split_hot_buckets}")
     if n_blocks - blocks_per_key < max_hamming:
         raise ValueError(
             f"pigeonhole violated: n_blocks({n_blocks}) - "

@@ -51,8 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .codec import (decode_block, decode_plens, decode_positions,
-                    varint_decode, varint_encode)
+from .codec import decode_selected, encode_sorted_batch
 from .index_store import (FORMAT_VERSION, INITIAL_BATCH, IndexMeta,
                           IndexStore, _digest_expr, _run_concurrent,
                           append_to_index)
@@ -591,36 +590,13 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
 # purge merge (phase 2) — applied by compact_index when tombstones exist
 # --------------------------------------------------------------------
 
-def _encode_docstats_pseudo(sd: np.ndarray, sl: np.ndarray,
-                            shard: int) -> pd.DataFrame:
-    """Docstats pseudo-term rows for one shard — byte-compatible with
-    the build encoder's inline emission (indexer.py run())."""
-    from .indexer import _DOCSTATS_BLOCK, _SEG_COLS, DOCSTATS_TERM
-    recs = []
-    for seq, b0 in enumerate(range(0, len(sd), _DOCSTATS_BLOCK)):
-        b1 = min(b0 + _DOCSTATS_BLOCK, len(sd))
-        gaps = np.diff(sd[b0:b1], prepend=sd[b0]).astype(np.uint64)
-        recs.append({
-            "term": DOCSTATS_TERM, "shard": int(shard), "salt": 0,
-            "block_seq": seq, "first_doc": int(sd[b0]),
-            "last_doc": int(sd[b1 - 1]), "n_docs": int(b1 - b0),
-            "max_tf": 0, "sum_tf": 0, "min_dl": 0,
-            "doc_bytes": varint_encode(gaps),
-            "tf_bytes": b"",
-            "dl_bytes": varint_encode(sl[b0:b1].astype(np.uint64)),
-            "imp_bytes": None, "pos_bytes": None, "pl_bytes": None,
-        })
-    return pd.DataFrame(recs, columns=_SEG_COLS)
-
-
 def _purge_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     """Re-encode one NEW shard dropping tombstoned docs and renumbering
     ids densely. ``left``: the shard's segment rows (plus ``new_shard``
     / ``new_start``); ``right``: its tombstones. One vectorized
     ``encode_sorted_batch`` call re-blocks everything — the same code
     path (and memory bound) as the map-only build encoder."""
-    from .codec import encode_sorted_batch
-    from .indexer import _SEG_COLS, DOCSTATS_TERM
+    from .indexer import _SEG_COLS, DOCSTATS_TERM, docstats_rows
 
     empty = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in zip(
         _SEG_COLS, ["object", "int32", "int32", "int32", "int64",
@@ -638,20 +614,13 @@ def _purge_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     deleted = np.sort(right["doc_id"].to_numpy().astype(np.int64)) \
         if len(right) else np.zeros(0, np.int64)
 
-    pseudo = left[left["term"] == DOCSTATS_TERM]
-    real = left[left["term"] != DOCSTATS_TERM] \
+    is_pseudo = (left["term"] == DOCSTATS_TERM).to_numpy()
+    real = left[~is_pseudo] \
         .sort_values(["term", "salt", "first_doc"], kind="stable")
 
     # all (doc, dl) of the shard from the pseudo rows -> survivors
-    ids_c, dls_c = [], []
-    for fd, nd, db, lb in zip(pseudo["first_doc"], pseudo["n_docs"],
-                              pseudo["doc_bytes"], pseudo["dl_bytes"]):
-        gaps = varint_decode(db, int(nd)).astype(np.int64)
-        ids_c.append(np.cumsum(gaps) + int(fd) - (int(gaps[0])
-                                                  if len(gaps) else 0))
-        dls_c.append(varint_decode(lb, int(nd)).astype(np.int64))
-    all_ids = np.concatenate(ids_c) if ids_c else np.zeros(0, np.int64)
-    all_dls = np.concatenate(dls_c) if dls_c else np.zeros(0, np.int64)
+    ps = decode_selected(left, np.flatnonzero(is_pseudo), ("doc", "dl"))
+    all_ids, all_dls = ps["doc"], ps["dl"]
     o = np.argsort(all_ids)
     all_ids, all_dls = all_ids[o], all_dls[o]
     live_mask = ~np.isin(all_ids, deleted)
@@ -662,51 +631,30 @@ def _purge_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     new_ids_shard = (new_start + np.arange(len(survivors), dtype=np.int64)
                      ) if renumber else survivors
 
-    out_frames = [
-        _encode_docstats_pseudo(new_ids_shard, all_dls[live_mask],
+    out_frames = [docstats_rows(new_ids_shard, all_dls[live_mask],
                                 new_shard)]
 
-    # decode every real block -> occurrence-level arrays, masked + renumbered
-    has_pos = real["pos_bytes"].notna().any() if len(real) else False
-    has_pl = ("pl_bytes" in real.columns
-              and real["pl_bytes"].notna().any()) if len(real) else False
-    doc_c, pos_c, pl_c, dl_c, gid_c = [], [], [], [], []
-    group_terms: list = []   # (term, salt) per group id
-    last_key = None
-    for row in real.itertuples(index=False):
-        docs, tfs = decode_block(int(row.first_doc), row.doc_bytes,
-                                 row.tf_bytes, int(row.n_docs))
-        dls = varint_decode(row.dl_bytes, int(row.n_docs)).astype(np.int64)
-        keep = ~np.isin(docs, deleted)
-        key = (row.term, int(row.salt))
-        if key != last_key:
-            group_terms.append(key)
-            last_key = key
-        if has_pos:
-            pos = decode_positions(row.pos_bytes, tfs)
-            occ = np.repeat(keep, tfs)
-            doc_c.append(np.repeat(docs, tfs)[occ])
-            pos_c.append(pos[occ])
-            if has_pl:
-                pl_c.append(decode_plens(row.pl_bytes, tfs)[occ])
-            dl_c.append(np.repeat(dls, tfs)[occ])
-            gid_c.append(np.full(int(occ.sum()), len(group_terms) - 1,
-                                 dtype=np.int64))
-        else:
-            # no positions stored: expand tf-wise so encode_sorted_batch
-            # recovers tf from run lengths
-            occ = np.repeat(keep, tfs)
-            doc_c.append(np.repeat(docs, tfs)[occ])
-            dl_c.append(np.repeat(dls, tfs)[occ])
-            gid_c.append(np.full(int(occ.sum()), len(group_terms) - 1,
-                                 dtype=np.int64))
-    if not doc_c or not sum(len(d) for d in doc_c):
+    # decode every real block -> occurrence-level arrays (tf-wise
+    # expanded even without positions, so encode_sorted_batch recovers
+    # tf from run lengths), masked + renumbered
+    has_pos = bool(real["pos_bytes"].notna().any())
+    has_pl = "pl_bytes" in real.columns \
+        and bool(real["pl_bytes"].notna().any())
+    dec = decode_selected(real, np.arange(len(real)), ("doc", "tf", "dl")
+                          + ("pos",) * has_pos + ("pl",) * has_pl)
+    tf = dec["tf"]
+    # one group id per (term, salt) run of rows
+    terms, salts = real["term"].to_numpy(), real["salt"].to_numpy()
+    chg = np.ones(len(real), dtype=bool)
+    chg[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
+    occ = np.repeat(~np.isin(dec["doc"], deleted), tf)
+    if not occ.any():
         return pd.concat(out_frames, ignore_index=True)
-    doc = np.concatenate(doc_c)
-    dl_tok = np.concatenate(dl_c)
-    gid = np.concatenate(gid_c)
-    pos = np.concatenate(pos_c) if has_pos else None
-    plen = np.concatenate(pl_c) if has_pl else None
+    doc = np.repeat(dec["doc"], tf)[occ]
+    dl_tok = np.repeat(dec["dl"], tf)[occ]
+    gid = np.repeat(np.repeat(np.cumsum(chg) - 1, dec["n"]), tf)[occ]
+    pos = dec["pos"][occ] if has_pos else None
+    plen = dec["plen"][occ] if has_pl else None
     # renumber (monotone within the shard -> sort order preserved)
     if renumber:
         doc = new_start + np.searchsorted(survivors, doc).astype(np.int64)
@@ -717,13 +665,11 @@ def _purge_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     enc = encode_sorted_batch(grp_change, doc, pos, dl_tok, plen=plen)
     tok_idx = enc.pop("doc_start_tok")
     nb = len(tok_idx)
-    terms_arr = np.array([t for t, _s in group_terms], dtype=object)
-    salts_arr = np.array([s for _t, s in group_terms], dtype=np.int32)
     blk_gid = gid[tok_idx]
     out_frames.append(pd.DataFrame({
-        "term": terms_arr[blk_gid],
+        "term": terms[chg][blk_gid],
         "shard": np.full(nb, new_shard, dtype=np.int32),
-        "salt": salts_arr[blk_gid],
+        "salt": salts[chg][blk_gid].astype(np.int32),
         **enc,
     }, columns=_SEG_COLS))
     return pd.concat(out_frames, ignore_index=True)

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from .codec import (BLOCK_DOCS, encode_sorted_batch, varint_decode,
+from .codec import (BLOCK_DOCS, decode_selected, encode_sorted_batch,
                     varint_encode)
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig, _tokenize_block, blocks
@@ -478,30 +478,34 @@ def build_segments_maponly(docs: DataFrame, cfg: TokenizerConfig,
                 **enc,
             }, columns=_SEG_COLS)
 
-            # docstats pseudo-term rows: (doc gaps, dls) varint blocks
-            sd = np.asarray(sdocs, dtype=np.int64)
-            sl = np.asarray(sdls, dtype=np.int64)
-            o = np.argsort(sd)
-            sd, sl = sd[o], sl[o]
-            recs = []
-            for seq, b0 in enumerate(range(0, len(sd), _DOCSTATS_BLOCK)):
-                b1 = min(b0 + _DOCSTATS_BLOCK, len(sd))
-                gaps = np.diff(sd[b0:b1], prepend=sd[b0]).astype(np.uint64)
-                recs.append({
-                    "term": DOCSTATS_TERM, "shard": int(sh), "salt": 0,
-                    "block_seq": seq, "first_doc": int(sd[b0]),
-                    "last_doc": int(sd[b1 - 1]), "n_docs": int(b1 - b0),
-                    "max_tf": 0, "sum_tf": 0, "min_dl": 0,
-                    "doc_bytes": varint_encode(gaps),
-                    "tf_bytes": b"",
-                    "dl_bytes": varint_encode(sl[b0:b1].astype(np.uint64)),
-                    "imp_bytes": None,
-                    "pos_bytes": None,
-                    "pl_bytes": None,
-                })
-            yield pd.DataFrame(recs, columns=_SEG_COLS)
+            yield docstats_rows(sdocs, sdls, sh)
 
     return routed.mapInPandas(run, schema=SEGMENT_SCHEMA)
+
+
+def docstats_rows(doc_ids: np.ndarray, dls: np.ndarray,
+                  shard: int) -> pd.DataFrame:
+    """The docstats pseudo-term rows of one shard (layout in the codec
+    module docstring) from its docs' (doc_id, dl) pairs, any order.
+    The build and the merges write them only through here."""
+    sd = np.asarray(doc_ids, dtype=np.int64)
+    o = np.argsort(sd)
+    sd, sl = sd[o], np.asarray(dls, dtype=np.int64)[o]
+    recs = []
+    for seq, b0 in enumerate(range(0, len(sd), _DOCSTATS_BLOCK)):
+        b1 = min(b0 + _DOCSTATS_BLOCK, len(sd))
+        recs.append({
+            "term": DOCSTATS_TERM, "shard": int(shard), "salt": 0,
+            "block_seq": seq, "first_doc": int(sd[b0]),
+            "last_doc": int(sd[b1 - 1]), "n_docs": int(b1 - b0),
+            "max_tf": 0, "sum_tf": 0, "min_dl": 0,
+            "doc_bytes": varint_encode(
+                np.diff(sd[b0:b1], prepend=sd[b0]).astype(np.uint64)),
+            "tf_bytes": b"",
+            "dl_bytes": varint_encode(sl[b0:b1].astype(np.uint64)),
+            "imp_bytes": None, "pos_bytes": None, "pl_bytes": None,
+        })
+    return pd.DataFrame(recs, columns=_SEG_COLS)
 
 
 def decode_docstats_rows(rows: DataFrame,
@@ -513,26 +517,11 @@ def decode_docstats_rows(rows: DataFrame,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, dls, shs = [], [], []
-            for row in pdf.itertuples(index=False):
-                nd = int(row.n_docs)
-                gaps = varint_decode(row.doc_bytes, nd).astype(np.int64)
-                ids.append(np.cumsum(gaps) + int(row.first_doc)
-                           - int(gaps[0])
-                           if len(gaps) else np.zeros(0, np.int64))
-                dls.append(varint_decode(row.dl_bytes, nd)
-                           .astype(np.int64))
-                if keep_shard:
-                    shs.append(np.full(nd, int(row.shard), np.int32))
-            out = {
-                "doc_id": np.concatenate(ids) if ids else
-                np.zeros(0, np.int64),
-                "dl": (np.concatenate(dls) if dls
-                       else np.zeros(0, np.int64)).astype(np.int32),
-            }
+            dec = decode_selected(pdf, np.arange(len(pdf)), ("doc", "dl"))
+            out = {"doc_id": dec["doc"], "dl": dec["dl"].astype(np.int32)}
             if keep_shard:
-                out["shard"] = (np.concatenate(shs) if shs
-                                else np.zeros(0, np.int32))
+                out["shard"] = np.repeat(pdf["shard"].to_numpy(),
+                                         dec["n"]).astype(np.int32)
             yield pd.DataFrame(out)
 
     cols = ["first_doc", "n_docs", "doc_bytes", "dl_bytes"]

@@ -43,8 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .codec import (decode_block, decode_impacts, decode_plens,
-                    decode_positions, varint_decode)
+from .codec import decode_selected
 from .index_store import IndexStore
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig, tokenize
@@ -328,29 +327,12 @@ def decoded_postings(spark: SparkSession, store: IndexStore,
 
     def run(batches):
         for pdf in batches:
-            outs = {"term": [], "doc_id": [], "tf": [], "dl": []}
-            for t, fd, nd, db, tb, lb in zip(
-                    pdf["term"], pdf["first_doc"], pdf["n_docs"],
-                    pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"]):
-                docs, tfs = decode_block(fd, db, tb, nd)
-                dls = varint_decode(lb, nd).astype(np.int64)
-                if want is not None:
-                    m = np.isin(docs, want)
-                    docs, tfs, dls = docs[m], tfs[m], dls[m]
-                    nd = len(docs)
-                outs["term"].extend([t] * nd)
-                outs["doc_id"].append(docs)
-                outs["tf"].append(tfs)
-                outs["dl"].append(dls)
-            yield pd.DataFrame({
-                "term": outs["term"],
-                "doc_id": np.concatenate(outs["doc_id"]) if outs["doc_id"]
-                else np.zeros(0, np.int64),
-                "tf": np.concatenate(outs["tf"]) if outs["tf"]
-                else np.zeros(0, np.int64),
-                "dl": np.concatenate(outs["dl"]) if outs["dl"]
-                else np.zeros(0, np.int64),
-            })
+            dec = decode_selected(pdf, np.arange(len(pdf)),
+                                  ("doc", "tf", "dl"))
+            out = pd.DataFrame({
+                "term": np.repeat(pdf["term"].to_numpy(), dec["n"]),
+                "doc_id": dec["doc"], "tf": dec["tf"], "dl": dec["dl"]})
+            yield out if want is None else out[np.isin(dec["doc"], want)]
 
     return blocks.mapInPandas(
         run, schema="term string, doc_id long, tf long, dl long")
@@ -760,6 +742,80 @@ def _fanout(df: DataFrame, key: str = "shard") -> DataFrame:
     return df.repartition(n, key)
 
 
+# --------------------------------------------------------------------
+# phrase matching over decoded occurrences. Occurrence keys pack
+# (doc - base) << 32 | position into one sortable int64.
+# --------------------------------------------------------------------
+
+def _graph_step(frontier: np.ndarray | None, docs: np.ndarray,
+                pos: np.ndarray, plen: np.ndarray,
+                base: int) -> np.ndarray:
+    """One position of the token-graph phrase walk. A token occupies
+    [pos, pos + plen); the next position's token must START where a
+    surviving token ENDS (how MultiPhraseQuery consumes posLength —
+    SynonymFilter.java:472-526's single-token output spanning a
+    multi-word match phrase-matches through here). ``frontier`` holds
+    the previous position's end keys (None before the first); returns
+    this position's (sorted, unique). With every span 1 the chain is
+    exactly the exact-phrase start-key intersection."""
+    dk = (docs - base) << np.int64(32)
+    ends = dk | (pos + plen)
+    if frontier is not None:
+        ends = ends[np.isin(dk | pos, frontier)]
+    return np.unique(ends)
+
+
+def _key_docs(keys: np.ndarray, base: int) -> np.ndarray:
+    """Sorted unique doc ids of occurrence keys."""
+    return np.unique(keys >> np.int64(32)) + base
+
+
+def _start_keys(offsets, occ, base: int,
+                cand: np.ndarray | None = None) -> np.ndarray:
+    """Exact-phrase start keys: (doc, start) present at every phrase
+    offset, an occurrence at position p of offset i starting the phrase
+    at p - i. ``offsets`` is the visit order (intersection commutes, so
+    rarest first decodes least); ``occ(i, cand)`` returns offset i's
+    occurrence (docs, positions), decoding only blocks that can hold a
+    ``cand`` doc — each offset's surviving docs gate the next one."""
+    keys = None
+    for i in offsets:
+        docs, pos = occ(i, cand)
+        ok = pos >= i
+        enc = np.unique(((docs[ok] - base) << np.int64(32)) | (pos[ok] - i))
+        keys = enc if keys is None else \
+            np.intersect1d(keys, enc, assume_unique=True)
+        if len(keys) == 0:
+            break
+        cand = _key_docs(keys, base)
+    return keys
+
+
+def _delta_probe(keys0: np.ndarray, docs1: np.ndarray, pos1: np.ndarray,
+                 deltas, base: int) -> np.ndarray:
+    """Docs where an occurrence (docs1, pos1) lies ``delta`` positions
+    after an occurrence key of ``keys0``, for some delta in ``deltas``:
+    a bounded window of vectorized membership probes (span_near and
+    two-position slop)."""
+    hits = [np.zeros(0, np.int64)]
+    for delta in deltas:
+        q = pos1 - delta
+        m = q >= 0
+        hits.append(docs1[m][np.isin(
+            ((docs1[m] - base) << np.int64(32)) | q[m], keys0)])
+    return np.unique(np.concatenate(hits))
+
+
+def _require_positions(meta, plan: QueryPlan | None,
+                       phrase: bool) -> None:
+    """Driver-side gate for every plan that walks positions
+    (``phrase=True`` or per-clause phrase runs)."""
+    if (phrase or (plan is not None and plan.phrase_runs)) \
+            and not meta.store_positions:
+        raise ValueError("phrase matching requires an index built with "
+                         "store_positions=True (this one has none)")
+
+
 def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
                 phrase: bool = False,
                 deleted: np.ndarray | None = None,
@@ -871,27 +927,16 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
             [np.zeros(0, np.int64)]))
         for g in plan.groups]
 
-    # quantized impacts (v8): decode EVERY block's pareto pairs with
-    # ONE vectorized varint pass over the concatenated buffers (per-row
-    # decode_impacts calls were ~8µs each — another batch ceiling), then
-    # per-(term, window) slices by binary search (a term's blocks are
-    # doc-disjoint, so first_doc and last_doc are both sorted). A block
-    # without impacts (pre-v8) poisons its (term, window)s -> fallback.
-    has_imp = "imp_bytes" in pdf.columns
-    imp_f: list = [None] * len(pdf)
-    imp_d: list = [None] * len(pdf)
-    if has_imp:
-        bufs = pdf["imp_bytes"].tolist()
-        present = [i for i, b in enumerate(bufs) if b is not None]
-        if present:
-            allv = varint_decode(
-                b"".join(bufs[i] for i in present)).astype(np.int64)
-            pos = 0
-            for i in present:
-                p = int(allv[pos])
-                imp_f[i] = allv[pos + 1:pos + 1 + p]
-                imp_d[i] = allv[pos + 1 + p:pos + 1 + 2 * p]
-                pos += 1 + 2 * p
+    # quantized impacts (v8): decode EVERY block's pareto pairs in one
+    # kernel call, then per-(term, window) slices by binary search (a
+    # term's blocks are doc-disjoint, so first_doc and last_doc are both
+    # sorted). A block without impacts (pre-v8) decodes to zero pairs
+    # and poisons its (term, window)s -> fallback.
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    has_imp = "imp_bytes" in cols
+    imp = decode_selected(cols, np.arange(len(pdf)), ("imp",))
+    imp_n = imp["imp_n"]
+    imp_off = np.cumsum(imp_n) - imp_n     # each row's first pair
     ti_first: dict[int, tuple] = {}
     for ti, rws in rows_by_ti.items():
         o = np.argsort(first[rws], kind="stable")
@@ -916,11 +961,12 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
             sel = rws[j0:j1]
             if len(sel) == 0:
                 continue               # term absent in window: F_t = 0
-            fls = [imp_f[r] for r in sel]
-            if any(x is None for x in fls):
+            cnt = imp_n[sel]
+            if not cnt.all():
                 return None
-            f = np.concatenate(fls)
-            d = np.concatenate([imp_d[r] for r in sel])
+            idx = np.arange(cnt.sum()) + np.repeat(
+                imp_off[sel] - np.cumsum(cnt) + cnt, cnt)
+            f, d = imp["imp_f"][idx], imp["imp_d"][idx]
             o = np.lexsort((f, d))
             d, f = d[o], f[o]
             fc = np.maximum.accumulate(f)
@@ -1003,79 +1049,30 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
 
     k1, b, avgdl = plan.k1, plan.b, plan.avgdl
 
-    has_pl = "pl_bytes" in pdf.columns
-
-    ndocs_arr = pdf["n_docs"].to_numpy().astype(np.int64)
-    doc_bytes_l = pdf["doc_bytes"].tolist()
-    tf_bytes_l = pdf["tf_bytes"].tolist()
-    dl_bytes_l = pdf["dl_bytes"].tolist()
-
     def decode_group_window(gi: int, d0: int, d1: int, want_pos: bool):
         """decoded merged postings of group gi limited to [d0, d1);
         with ``want_pos`` also the flat (doc, position, pos_len)
         occurrence arrays (union over the group's alternative
-        terms).
-
-        All selected blocks decode in ONE varint pass per stream
-        (buffers concatenated, segmented cumsum re-anchors each block
-        at its first_doc): per-block decode calls were ~40µs of fixed
-        numpy overhead each — the batch-serving ceiling once pruning
-        removed the large decodes."""
+        terms)."""
         rows = blk_rows_by_gid[gi]
         sel = rows[(first[rows] < d1) & (last[rows] >= d0)]
-        if len(sel) == 0:
-            z = np.zeros(0, np.int64)
-            return z, z, z, z, z, z
-        counts = ndocs_arr[sel]
-        ends = np.cumsum(counts)
-        starts = ends - counts
-        gaps = varint_decode(
-            b"".join(doc_bytes_l[i] for i in sel)).astype(np.int64)
-        # segmented cumsum: blocks encode gap 0 at their start, so the
-        # running sum minus its value at each block boundary, plus the
-        # block's first_doc, recovers absolute ids
-        acc = np.cumsum(gaps)
-        base = np.repeat(acc[starts] - gaps[starts], counts)
-        docs = acc - base + np.repeat(first[sel], counts)
-        tfs = varint_decode(
-            b"".join(tf_bytes_l[i] for i in sel)).astype(np.int64)
-        dls = varint_decode(
-            b"".join(dl_bytes_l[i] for i in sel)).astype(np.int64)
-        m = (docs >= d0) & (docs < d1)
-        pdocs_all, pvals_all, plens_all = [], [], []
-        if want_pos:
-            # positions stay per-block (phrase-only path; per-doc
-            # delta chains need per-block tf alignment)
-            for j, i in enumerate(sel):
-                mb = m[starts[j]:ends[j]]
-                if not mb.any():
-                    continue
-                tfb = tfs[starts[j]:ends[j]]
-                docb = docs[starts[j]:ends[j]]
-                pos = decode_positions(pdf["pos_bytes"].iat[i], tfb)
-                pl = decode_plens(pdf["pl_bytes"].iat[i] if has_pl
-                                  else None, tfb)
-                mk = np.repeat(mb, tfb)
-                pdocs_all.append(np.repeat(docb, tfb)[mk])
-                pvals_all.append(pos[mk])
-                plens_all.append(pl[mk])
-        docs = docs[m]
-        tfs = tfs[m]
-        dls = dls[m]
-        if len(docs) == 0:
-            z = np.zeros(0, np.int64)
+        dec = decode_selected(cols, sel, ("doc", "tf", "dl", "pos", "pl")
+                              if want_pos else ("doc", "tf", "dl"))
+        m = (dec["doc"] >= d0) & (dec["doc"] < d1)
+        z = np.zeros(0, np.int64)
+        if not m.any():
             return z, z, z, z, z, z
         # merge alternatives: sum tf per doc
-        udocs, inv = np.unique(docs, return_inverse=True)
+        udocs, inv = np.unique(dec["doc"][m], return_inverse=True)
         utf = np.zeros(len(udocs), np.int64)
-        np.add.at(utf, inv, tfs)
+        np.add.at(utf, inv, dec["tf"][m])
         udl = np.zeros(len(udocs), np.int64)
-        udl[inv] = dls
-        z = np.zeros(0, np.int64)
-        pdocs = np.concatenate(pdocs_all) if pdocs_all else z
-        pvals = np.concatenate(pvals_all) if pvals_all else z
-        plens = np.concatenate(plens_all) if plens_all else z
-        return udocs, utf, udl, pdocs, pvals, plens
+        udl[inv] = dec["dl"][m]
+        if not want_pos:
+            return udocs, utf, udl, z, z, z
+        mk = np.repeat(m, dec["tf"])
+        return (udocs, utf, udl, dec["occ_doc"][mk], dec["pos"][mk],
+                dec["plen"][mk])
 
     for w in order:
         bound = float(win_ub[w])
@@ -1101,14 +1098,7 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
         d0, d1 = lo + w * win, lo + (w + 1) * win
         gdocs: list[np.ndarray] = []
         gscores: list[np.ndarray] = []
-        # phrase verification walks the token GRAPH: a token occupies
-        # span [pos, pos + pos_len); group gi+1 must START where some
-        # surviving group-gi token ENDS (how MultiPhraseQuery consumes
-        # posLength — SynonymFilter.java:472-526's single-token output
-        # spanning a multi-word match phrase-matches through here).
-        # frontier holds the live (doc - d0) << 32 | boundary keys; for
-        # span-1 indexes (pl_bytes absent) this chain is exactly the
-        # old start-key intersection.
+        # phrase verification walks the token graph (_graph_step)
         frontier: np.ndarray | None = None
         not_docs: list[np.ndarray] = []
         filt_docs: list[np.ndarray] = []
@@ -1158,12 +1148,7 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
             gkinds.append(gi in must_set)
             gscores.append(plan.idfs[gi] * tfn)
             if phrase:
-                dk = (pdocs - d0) << np.int64(32)
-                if frontier is None:
-                    frontier = np.unique(dk | (pvals + plens))
-                else:
-                    sel = np.isin(dk | pvals, frontier)
-                    frontier = np.unique((dk | (pvals + plens))[sel])
+                frontier = _graph_step(frontier, pdocs, pvals, plens, d0)
                 if len(frontier) == 0:
                     dead = True
                     break
@@ -1223,8 +1208,7 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
             # only lowers attainable window scores, bounds stay valid
             keep &= ~np.isin(u, np.concatenate(not_docs))
         if phrase:
-            verified = np.unique(frontier >> np.int64(32)) + d0
-            keep &= np.isin(u, verified)
+            keep &= np.isin(u, _key_docs(frontier, d0))
         if runs:
             # per-clause adjacency walks (QueryPlan.phrase_runs). Each
             # run replays the token-graph frontier of ``phrase=True``
@@ -1236,21 +1220,11 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
             for s_, n_ in runs:
                 fr = None
                 for gi in range(s_, s_ + n_):
-                    pdocs, pvals, plens = pos_by_gi.get(
-                        gi, (znil, znil, znil))
-                    if len(pdocs) == 0:
-                        fr = znil
-                        break
-                    dk = (pdocs - d0) << np.int64(32)
-                    if fr is None:
-                        fr = np.unique(dk | (pvals + plens))
-                    else:
-                        sel_ = np.isin(dk | pvals, fr)
-                        fr = np.unique((dk | (pvals + plens))[sel_])
+                    fr = _graph_step(fr, *pos_by_gi.get(
+                        gi, (znil, znil, znil)), d0)
                     if len(fr) == 0:
                         break
-                vdocs = (np.unique(fr >> np.int64(32)) + d0) \
-                    if fr is not None and len(fr) else znil
+                vdocs = _key_docs(fr, d0)
                 if s_ in not_set:
                     if len(vdocs):
                         keep &= ~np.isin(u, vdocs)
@@ -1377,9 +1351,6 @@ def search(spark: SparkSession, store: IndexStore, text: str, k: int = 10,
     promote a doc that wasn't already in the unfiltered top-k (the
     result just shrinks below k when the floor bites)."""
     meta = store.meta()
-    if phrase and not meta.store_positions:
-        raise ValueError("phrase=True requires an index built with "
-                         "store_positions=True (this one has none)")
     plan = plan_query(spark, store, text, syn, cfg, groups)
     if not plan.groups:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -1457,6 +1428,7 @@ def _wand_topk(spark: SparkSession, store: IndexStore, meta,
     """The shard-parallel WAND execution behind ``search``, taking a
     pre-built plan (so multi-field search can run it per field without
     re-analysis)."""
+    _require_positions(meta, plan, phrase)
     # column pruning matters here: pos_bytes is the FATTEST stream
     # (every occurrence's delta-coded position) and a non-phrase query
     # never touches it — reading it anyway made the parquet scan, not
@@ -1557,6 +1529,8 @@ def search_batch(spark: SparkSession, store: IndexStore,
     if phrase and any(p.kinds is not None for p in plans):
         raise ValueError("phrase=True is not supported with "
                          "kinds-tagged bool plans")
+    for p in plans:
+        _require_positions(meta, p, phrase)
     cols = ["term", "shard", "first_doc", "last_doc", "n_docs",
             "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
             "imp_bytes"]
@@ -1752,59 +1726,30 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
     def block_rows(g: list[str]) -> list[int]:
         return [i for t in g for i in by_term.get(t, ())]
 
-    doc_bytes_l = pdf["doc_bytes"].tolist()
-    tf_bytes_l = pdf["tf_bytes"].tolist()
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    znil = np.zeros(0, np.int64)
 
     def group_arrays(g: list[str], want_pos: bool,
                      cand: np.ndarray | None):
         """(unique doc array, flat (doc, pos, pos_len) occurrence
         arrays), restricted to blocks whose doc range can intersect
-        ``cand``. Selected blocks decode in ONE varint pass per stream
-        (concatenated buffers + segmented cumsum — the same batching
-        as the WAND worker; per-block decode calls are ~40µs of fixed
-        overhead each)."""
-        sel = []
-        for i in block_rows(g):
-            if cand is not None:
-                j = np.searchsorted(cand, first[i])
-                if j >= len(cand) or cand[j] > last[i]:
-                    continue  # no candidate inside this block's range
-            sel.append(i)
-        z = np.zeros(0, np.int64)
-        if not sel:
-            return z, z, z, z
+        ``cand``."""
+        sel = np.asarray(block_rows(g), dtype=np.int64)
+        if cand is not None:
+            # first candidate at or after each block's first_doc must
+            # fall inside the block's range
+            nxt = np.append(cand, np.iinfo(np.int64).max)
+            sel = sel[nxt[np.searchsorted(cand, first[sel])] <= last[sel]]
         decoded[0] += len(sel)
-        sel = np.asarray(sel, dtype=np.int64)
-        counts = nds[sel].astype(np.int64)
-        ends = np.cumsum(counts)
-        starts = ends - counts
-        gaps = varint_decode(
-            b"".join(doc_bytes_l[i] for i in sel)).astype(np.int64)
-        acc = np.cumsum(gaps)
-        base = np.repeat(acc[starts] - gaps[starts], counts)
-        docs_flat = acc - base + np.repeat(
-            first[sel].astype(np.int64), counts)
-        pd_all, pv_all, pl_all = [], [], []
-        if want_pos:
-            tfs_flat = varint_decode(
-                b"".join(tf_bytes_l[i] for i in sel)).astype(np.int64)
-            for j, i in enumerate(sel):
-                tfb = tfs_flat[starts[j]:ends[j]]
-                docb = docs_flat[starts[j]:ends[j]]
-                pos = decode_positions(pdf["pos_bytes"].iat[i], tfb)
-                pd_all.append(np.repeat(docb, tfb))
-                pv_all.append(pos)
-                if has_pl:
-                    pl_all.append(decode_plens(pdf["pl_bytes"].iat[i],
-                                               tfb))
-        docs = np.unique(docs_flat)
-        pdc = np.concatenate(pd_all) if pd_all else z
-        pvc = np.concatenate(pv_all) if pv_all else z
-        plc = np.concatenate(pl_all) if pl_all else (
-            np.ones(len(pdc), np.int64) if want_pos else z)
-        return docs, pdc, pvc, plc
+        dec = decode_selected(cols, sel, ("doc", "pos", "pl")
+                              if want_pos else ("doc",))
+        if not want_pos:
+            return np.unique(dec["doc"]), znil, znil, znil
+        return (np.unique(dec["doc"]), dec["occ_doc"], dec["pos"],
+                dec["plen"])
 
-    znil = np.zeros(0, np.int64)
+    def occ(g: list[str], cand: np.ndarray | None):
+        return group_arrays(g, True, cand)[1:3]
 
     def done(docs) -> np.ndarray:
         if stats is not None:
@@ -1846,46 +1791,20 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
                              "posLength-graph (token-filter "
                              "composed) indexes")
         n0, sl, in_order = plan.span
-        lo = int(first.min()) if len(pdf) else 0
-
-        def span_starts(gslice, cand0):
-            st, c = None, cand0
-            for off, g in enumerate(gslice):
-                _d, pdc, pvc, _plc = group_arrays(g, True, c)
-                ok = pvc >= off
-                enc = ((pdc[ok] - lo) << np.int64(32)) \
-                    | (pvc[ok] - off)
-                enc = np.unique(enc)
-                st = enc if st is None else \
-                    np.intersect1d(st, enc, assume_unique=True)
-                if len(st) == 0:
-                    return None, None
-                c = np.unique(st >> np.int64(32)) + lo
-            return st, c
-
-        k0, cand = span_starts(plan.groups[:n0], None)
-        if k0 is None:
-            return done(0)
-        k1, _c1 = span_starts(plan.groups[n0:], cand)
-        if k1 is None:
-            return done(0)
         L0, L1 = n0, len(plan.groups) - n0
-        pd1 = (k1 >> np.int64(32))
-        pv1 = k1 & np.int64(0xFFFFFFFF)
+        lo = int(first.min()) if len(pdf) else 0
+        k0 = _start_keys(range(L0), lambda i, c: occ(plan.groups[i], c),
+                         lo)
+        if len(k0) == 0:
+            return done(0)
+        k1 = _start_keys(range(L1),
+                         lambda i, c: occ(plan.groups[n0 + i], c), lo,
+                         _key_docs(k0, lo))
         deltas = range(L0, L0 + sl + 1) if in_order \
             else range(-(L1 + sl), L0 + sl + 1)
-        hits = []
-        for delta in deltas:
-            q = pv1 - delta
-            m = q >= 0
-            if not m.any():
-                continue
-            sel = np.isin((pd1[m] << np.int64(32)) | q[m], k0)
-            if sel.any():
-                hits.append(pd1[m][sel])
-        if not hits:
-            return done(0)
-        return done(live(np.unique(np.concatenate(hits)) + lo))
+        return done(live(_delta_probe(
+            k0, (k1 >> np.int64(32)) + lo, k1 & np.int64(0xFFFFFFFF),
+            deltas, lo)))
 
     if phrase and has_pl and plan.slop == 0:
         # posLength graph: adjacency is "group gi+1 starts where a
@@ -1896,19 +1815,13 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
         lo = int(first.min()) if len(pdf) else 0
         frontier: np.ndarray | None = None
         cand: np.ndarray | None = None
-        for gi in range(len(plan.groups)):
-            _docs, pdc, pvc, plc = group_arrays(plan.groups[gi], True,
-                                                cand)
-            dk = (pdc - lo) << np.int64(32)
-            if frontier is None:
-                frontier = np.unique(dk | (pvc + plc))
-            else:
-                sel = np.isin(dk | pvc, frontier)
-                frontier = np.unique((dk | (pvc + plc))[sel])
+        for g in plan.groups:
+            _docs, pdc, pvc, plc = group_arrays(g, True, cand)
+            frontier = _graph_step(frontier, pdc, pvc, plc, lo)
             if len(frontier) == 0:
                 return done(0)
-            cand = np.unique(frontier >> np.int64(32)) + lo
-        return done(live(np.unique(frontier >> np.int64(32)) + lo))
+            cand = _key_docs(frontier, lo)
+        return done(live(cand))
 
     if phrase and plan.slop > 0:
         # ES match_phrase ``slop`` — exact Lucene SloppyPhraseScorer
@@ -1924,42 +1837,18 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
             raise ValueError("slop is not supported on posLength-"
                              "graph (token-filter composed) indexes")
         lo = int(first.min()) if len(pdf) else 0
-        d0, pd0, pv0, _pl0 = group_arrays(plan.groups[0], True, None)
-        if len(d0) == 0:
+        k0 = _start_keys([0], lambda _i, c: occ(plan.groups[0], c), lo)
+        if len(k0) == 0:
             return done(0)
-        k0 = np.unique(((pd0 - lo) << np.int64(32)) + pv0)
-        _d1, pd1, pv1, _pl1 = group_arrays(plan.groups[1], True, d0)
-        hits = []
-        for delta in range(1 - plan.slop, 2 + plan.slop):
-            q = pv1 - delta
-            m = q >= 0
-            if not m.any():
-                continue
-            sel = np.isin(((pd1[m] - lo) << np.int64(32)) + q[m], k0)
-            if sel.any():
-                hits.append(pd1[m][sel])
-        if not hits:
-            return done(0)
-        return done(live(np.unique(np.concatenate(hits))))
+        pd1, pv1 = occ(plan.groups[1], _key_docs(k0, lo))
+        return done(live(_delta_probe(
+            k0, pd1, pv1, range(1 - plan.slop, 2 + plan.slop), lo)))
 
     if phrase:
         lo = int(first.min()) if len(pdf) else 0
-        starts: np.ndarray | None = None
-        cand: np.ndarray | None = None
-        for gi in order:
-            _docs, pdc, pvc, _plc = group_arrays(plan.groups[gi], True,
-                                                 cand)
-            ok = pvc >= gi
-            enc = ((pdc[ok] - lo) << np.int64(32)) | (pvc[ok] - gi)
-            enc = np.unique(enc)
-            starts = enc if starts is None else \
-                np.intersect1d(starts, enc, assume_unique=True)
-            if len(starts) == 0:
-                return done(0)
-            # surviving docs (sorted: starts is sorted and >>32 is
-            # monotone) gate the next group's block decodes
-            cand = np.unique(starts >> np.int64(32)) + lo
-        return done(live(np.unique(starts >> np.int64(32)) + lo))
+        keys = _start_keys(order, lambda gi, c: occ(plan.groups[gi], c),
+                           lo)
+        return done(live(_key_docs(keys, lo)))
 
     if plan.kinds is not None:
         # ES bool matching (must/should/must_not + msm), same
@@ -2141,9 +2030,6 @@ def count_matches(spark: SparkSession, store: IndexStore,
     phrases would need the full SloppyPhraseScorer repeat machinery
     and raise instead of approximating."""
     meta = store.meta()
-    if phrase and not meta.store_positions:
-        raise ValueError("phrase=True requires an index built with "
-                         "store_positions=True (this one has none)")
     if plan is None:
         plan = plan_query(spark, store, text, syn, cfg, groups)
         plan = _apply_msm(plan, mode, min_should_match, phrase)
@@ -2152,6 +2038,7 @@ def count_matches(spark: SparkSession, store: IndexStore,
                          "kinds-tagged bool plan (phrase adjacency "
                          "is defined over required positions only)")
     plan = _apply_slop(plan, phrase, slop)
+    _require_positions(meta, plan, phrase)
     if not plan.groups:
         return spark.createDataFrame([(0,)], "hits long")
 
@@ -2200,9 +2087,6 @@ def match_ids(spark: SparkSession, store: IndexStore, text: str = "",
     distributed output (ES likewise filters doc-id hash per slice
     inside each shard)."""
     meta = store.meta()
-    if phrase and not meta.store_positions:
-        raise ValueError("phrase=True requires an index built with "
-                         "store_positions=True (this one has none)")
     if plan is None:
         plan = plan_query(spark, store, text, syn, cfg, groups)
         plan = _apply_msm(plan, mode, min_should_match, phrase)
@@ -2211,6 +2095,7 @@ def match_ids(spark: SparkSession, store: IndexStore, text: str = "",
                          "kinds-tagged bool plan (phrase adjacency "
                          "is defined over required positions only)")
     plan = _apply_slop(plan, phrase, slop)
+    _require_positions(meta, plan, phrase)
     if not plan.groups:
         return spark.range(0).select(F.col("id").alias("doc_id"))
 

@@ -1,12 +1,14 @@
 """Codec round-trip tests (delta/varint/block encode, SURVEY E7)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from synspark.codec import (
-    BLOCK_DOCS, decode_block, decode_positions, encode_blocks,
-    encode_positions, varint_decode, varint_encode,
+    BLOCK_DOCS, STREAMS, decode_block, decode_impacts, decode_plens,
+    decode_positions, decode_selected, encode_blocks, encode_positions,
+    varint_decode, varint_encode,
 )
 
 
@@ -147,3 +149,107 @@ def test_impacts_parity_and_domination():
             for t, l in zip(tfs[s:e], dls[s:e]):
                 assert any(t <= fi and l >= di
                            for fi, di in zip(f, d)), (t, l, f, d)
+
+
+@st.composite
+def shard_frames(draw):
+    """A shard's block rows: several terms, several blocks each; with
+    or without positions, pl_bytes mixed None/present, imp_bytes
+    present, absent, or None on some rows."""
+    has_pos = draw(st.booleans())
+    imp_mode = draw(st.sampled_from(["all", "column_absent", "some_none"]))
+    rng = np.random.RandomState(draw(st.integers(0, 2**31 - 1)))
+    recs = []
+    for t in range(draw(st.integers(1, 4))):
+        n = int(rng.randint(1, 300))
+        docs = np.sort(rng.choice(5 * n + 10, n, replace=False))
+        tfs = rng.randint(1, 5, n).astype(np.int64)
+        dls = rng.randint(1, 500, n).astype(np.int64)
+        pos = plen = None
+        if has_pos:
+            pos = np.concatenate([np.sort(rng.choice(64, k, replace=False))
+                                  for k in tfs])
+            plen = rng.randint(1, 4, len(pos))
+        for b in encode_blocks(docs.astype(np.int64), tfs, pos, dls,
+                               block_docs=int(rng.choice([8, 32, 128])),
+                               plens_concat=plen):
+            if rng.rand() < 0.5:
+                b["pl_bytes"] = None
+            if imp_mode == "some_none" and rng.rand() < 0.5:
+                b["imp_bytes"] = None
+            recs.append({"term": f"t{t}", **b})
+    pdf = pd.DataFrame(recs)
+    if imp_mode == "column_absent":
+        pdf = pdf.drop(columns="imp_bytes")
+    return pdf, has_pos
+
+
+@given(shard_frames(), st.data())
+@settings(max_examples=80, deadline=None)
+def test_decode_selected_equals_per_block_decoders(frame, data):
+    """The batched kernel equals the per-block decoders' results
+    concatenated in row order, for any row subset and stream set."""
+    pdf, has_pos = frame
+    rows = data.draw(st.lists(st.integers(0, len(pdf) - 1), unique=True))
+    avail = [s for s in STREAMS if has_pos or s != "pos"]
+    streams = data.draw(st.sets(st.sampled_from(avail), min_size=1))
+    got = decode_selected(pdf, rows, streams)
+
+    want = {k: [] for k in ("n", "doc", "tf", "dl", "occ_doc", "pos",
+                            "plen", "imp_n", "imp_f", "imp_d")}
+    for r in rows:
+        row = pdf.iloc[r]
+        docs, tfs = decode_block(row.first_doc, row.doc_bytes,
+                                 row.tf_bytes, row.n_docs)
+        want["n"].append([row.n_docs])
+        want["doc"].append(docs)
+        want["tf"].append(tfs)
+        want["dl"].append(varint_decode(row.dl_bytes, row.n_docs))
+        want["plen"].append(decode_plens(row.pl_bytes, tfs))
+        if has_pos:
+            want["occ_doc"].append(np.repeat(docs, tfs))
+            want["pos"].append(decode_positions(row.pos_bytes, tfs))
+        ib = row.get("imp_bytes")
+        f, d = decode_impacts(ib) if ib is not None else ([], [])
+        want["imp_n"].append([len(f)])
+        want["imp_f"].append(f)
+        want["imp_d"].append(d)
+    keys = {"n"} | ({"doc", "tf", "dl"} & set(streams))
+    keys |= {"occ_doc", "pos"} if "pos" in streams else set()
+    keys |= {"plen"} if "pl" in streams else set()
+    keys |= {"imp_n", "imp_f", "imp_d"} if "imp" in streams else set()
+    assert keys <= set(got)
+    for k in keys:
+        exp = np.concatenate(want[k]).astype(np.int64) if want[k] \
+            else np.zeros(0, np.int64)
+        assert got[k].dtype == np.int64, k
+        assert got[k].tolist() == exp.tolist(), k
+
+
+def test_decode_selected_rejects_missing_positions():
+    blocks = encode_blocks(np.arange(5, dtype=np.int64),
+                           np.ones(5, dtype=np.int64))
+    with pytest.raises(ValueError, match="store_positions"):
+        decode_selected(pd.DataFrame(blocks), [0], ("pos",))
+
+
+@pytest.mark.parametrize("n", [1, 4096, 4097, 10_000])
+def test_docstats_rows_roundtrip(n):
+    """Docstats pseudo rows built by the one row builder decode back
+    through the kernel to the shard's (doc_id, dl) pairs, id-sorted."""
+    from synspark.indexer import DOCSTATS_TERM, docstats_rows
+    rng = np.random.RandomState(n)
+    ids = rng.choice(3 * n + 5, n, replace=False).astype(np.int64)
+    dls = rng.randint(1, 10_000, n).astype(np.int64)
+    rows = docstats_rows(ids, dls, shard=3)
+    assert (rows["term"] == DOCSTATS_TERM).all()
+    assert (rows["shard"] == 3).all()
+    assert rows["block_seq"].tolist() == list(range(len(rows)))
+    assert rows["n_docs"].sum() == n and rows["n_docs"].max() <= 4096
+    assert (rows["tf_bytes"] == b"").all()
+    dec = decode_selected(rows, np.arange(len(rows)), ("doc", "dl"))
+    o = np.argsort(ids)
+    assert dec["doc"].tolist() == ids[o].tolist()
+    assert dec["dl"].tolist() == dls[o].tolist()
+    assert rows["first_doc"].tolist() == [
+        int(dec["doc"][s]) for s in range(0, n, 4096)]

@@ -269,6 +269,17 @@ def test_dedup_drop_list(spark, docs):
     assert 4 not in out and 6 not in out  # unrelated docs survive
 
 
+def test_dedup_drop_list_null_text(spark):
+    """Null text is not an exact duplicate of other null text; real
+    duplicates next to it still drop."""
+    from synspark.datapipe.dedup import dedup_drop_list
+    t = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame([(1, None), (2, None), (3, t), (4, t)],
+                               "doc_id long, text string")
+    out = sorted(tuple(r) for r in dedup_drop_list(df).collect())
+    assert out == [(4, "exact")]
+
+
 def test_media_features_and_resize(spark, docs):
     from synspark.datapipe.multimodal import (as_media, decode_media,
                                               extract_features,

@@ -529,6 +529,7 @@ def test_synonym_flood_prunes_and_stays_exact(spark, tmp_path_factory,
     admissions — previously the subadditive bound over-estimated and
     every window decoded its full posting volume (measured 12.4s at
     10M docs). Exactness is pinned against the naive oracle."""
+    import synspark.codec as codec
     import synspark.query as q
     from synspark.query import plan_query, score_naive, search
 
@@ -556,15 +557,15 @@ def test_synonym_flood_prunes_and_stays_exact(spark, tmp_path_factory,
               .toPandas())
 
     calls = {"n": 0}
-    real = q.varint_decode
+    real = codec.varint_decode
 
     def counting(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(q, "varint_decode", counting)
+    monkeypatch.setattr(codec, "varint_decode", counting)
     out = q._wand_shard(blocks, plan, 10, "or")
-    monkeypatch.setattr(q, "varint_decode", real)
+    monkeypatch.setattr(codec, "varint_decode", real)
 
     # every doc ties; top-10 = smallest ids, decode stops after the
     # first window — a decoded window-group is 3 varint passes plus
@@ -630,6 +631,7 @@ def test_mixed_population_flood_prunes_via_impacts(spark,
     breakpoints equals the best population's tied score, and the
     tie-aware skip prunes the flood. Exactness pinned vs the naive
     oracle."""
+    import synspark.codec as codec
     import synspark.query as q
     from synspark.query import plan_query, score_naive, search
 
@@ -660,15 +662,15 @@ def test_mixed_population_flood_prunes_via_impacts(spark,
               .toPandas())
 
     calls = {"n": 0}
-    real = q.varint_decode
+    real = codec.varint_decode
 
     def counting(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(q, "varint_decode", counting)
+    monkeypatch.setattr(codec, "varint_decode", counting)
     out = q._wand_shard(blocks, plan, 10, "or")
-    monkeypatch.setattr(q, "varint_decode", real)
+    monkeypatch.setattr(codec, "varint_decode", real)
 
     naive = [(r.doc_id, round(r.score, 9)) for r in
              score_naive(spark, store, "", k=10, mode="or",

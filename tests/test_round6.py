@@ -162,3 +162,7 @@ def test_simhash_hot_bucket_grid(spark):
     grid = {tuple(r) for r in
             simhash_near_dups(sim, 3, split_hot_buckets=4).collect()}
     assert plain == grid and plain
+    # a non-positive granule is an error, not an empty pair set
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="split_hot_buckets"):
+            simhash_near_dups(sim, 3, split_hot_buckets=bad)

@@ -638,6 +638,15 @@ def test_phrase_requires_positions(spark, tmp_path_factory):
         search(spark, st, "ab cd", phrase=True).collect()
     with pytest.raises(ValueError, match="store_positions"):
         count_matches(spark, st, "ab cd", phrase=True).collect()
+    # batch serving and query_string phrases (slop-0 runs inside the
+    # WAND pass, sloppy ones through match_ids) fail on the driver too
+    from synspark.query import search_batch
+    from synspark.querystring import query_string
+    with pytest.raises(ValueError, match="store_positions"):
+        search_batch(spark, st, ["ab cd"], phrase=True).collect()
+    for qs in ('"ab cd"', '"ab cd"~1'):
+        with pytest.raises(ValueError, match="store_positions"):
+            query_string(spark, st, qs).collect()
     # non-phrase queries still work without positions
     assert search(spark, st, "ab", k=5).count() == 1
 
