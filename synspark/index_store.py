@@ -185,8 +185,7 @@ class IndexMeta:
     # delete-commit time instead of inside every query (round-4 task
     # #5 — at a million live tombstones the per-query routing cost
     # 8-11s vs 5.3s clean). Writers keep this equal to delete_batches;
-    # readers fall back to query-time routing for any batch without a
-    # mirror (pre-v8 stores).
+    # readers reject a store with a batch that has no mirror.
     routed_batches: list = field(default_factory=list)
 
 
@@ -358,16 +357,21 @@ class IndexStore:
             .select("doc_id")
 
     def deletes_routed(self, spark: SparkSession) -> DataFrame | None:
-        """Shard-routed tombstones (shard, doc_id) when EVERY committed
-        delete batch has a routed mirror, else None (caller falls back
-        to the query-time broadcast range join — pre-v8 stores only).
-        The mirror is written in the same commit as the delete batch,
-        so the snapshot gate is the same meta list."""
+        """Shard-routed tombstones (shard, doc_id), or None when nothing
+        is deleted. Every delete writer commits the routed mirror with
+        its batch (same meta list, same snapshot gate), so a batch
+        without one means a damaged store: raise rather than serve
+        queries that silently ignore its tombstones."""
         meta = self.meta()
         if not meta.delete_batches:
             return None
-        if not set(meta.delete_batches) <= set(meta.routed_batches):
-            return None
+        missing = sorted(set(meta.delete_batches)
+                         - set(meta.routed_batches))
+        if missing:
+            raise ValueError(
+                f"delete batches {missing} have no shard-routed "
+                "tombstone mirror (deletes_routed/); the store is "
+                "damaged — restore it from a snapshot")
         df = spark.read.option("ignoreMissingFiles", "true") \
             .parquet(str(self.path / "deletes_routed"))
         return df.filter(F.col("batch").isin(meta.delete_batches)) \

@@ -128,11 +128,13 @@ class QueryPlan:
     # maxEnd − minStart − Σlen ≤ slop criterion.
     span: tuple | None = None
     # per-clause positional gates (round 6, the Lucene
-    # SloppyPhraseMatcher-in-the-scorer shape): each (start, n) names a
-    # contiguous slice groups[start:start+n] analyzed from ONE quoted
-    # phrase; the slice's docs must ALSO satisfy exact adjacency
-    # (token-graph walk, identical to ``phrase=True``'s frontier) for
-    # the clause to take effect. Gate semantics follow kinds[start]:
+    # SloppyPhraseMatcher-in-the-scorer shape): each (start, n, slop)
+    # names a contiguous slice groups[start:start+n] analyzed from ONE
+    # quoted phrase; the slice's docs must ALSO satisfy adjacency for
+    # the clause to take effect — the token-graph walk of
+    # ``phrase=True`` at slop 0, the two-position move-distance test
+    # of ``_match_shard`` at slop > 0. Gate semantics follow
+    # kinds[start]:
     # 'm' — doc excluded unless the run verifies (required phrase);
     # 'n' — doc excluded IF the run verifies (negated phrase; the
     #       slice's groups never score or join not_docs — only the
@@ -141,9 +143,9 @@ class QueryPlan:
     #       run does not verify, and a verified run counts as the
     #       doc's admission ticket alongside the base msm (optional
     #       phrase under default_operator=or — true Lucene OR).
-    # This lets query_string verify phrases inside the ONE WAND pass
-    # instead of separate match_ids jobs + id-set routing.
-    phrase_runs: list[tuple[int, int]] | None = None
+    # This lets query_string verify every phrase inside the ONE WAND
+    # pass.
+    phrase_runs: list[tuple[int, int, int]] | None = None
 
     @property
     def terms(self) -> list[str]:
@@ -476,26 +478,15 @@ def _deletes_by_shard(spark: SparkSession, store: IndexStore,
                       meta=None) -> DataFrame | None:
     """Tombstoned doc_ids routed to their shard — (shard, doc_id), or
     None when the index has no committed deletes (the common case: the
-    query plan is then byte-identical to a delete-free engine). Routing
-    is a broadcast range join against the tiny shard-range frame —
-    tombstones flow executor-to-executor, never through the driver, and
-    each shard worker receives only ITS tombstones (Lucene's
-    per-segment liveDocs shape)."""
+    query plan is then byte-identical to a delete-free engine). Every
+    delete commit writes a shard-routed mirror beside its batch, so
+    this is a plain partition-pruned parquet scan — no range join, no
+    shard_doc_ranges job per query — and each shard worker receives
+    only ITS tombstones (Lucene's per-segment liveDocs shape)."""
     meta = meta or store.meta()
     if not meta.delete_batches:
         return None
-    # fast path: every delete commit since v8 also wrote a shard-routed
-    # mirror, so the hot serving path is a plain parquet scan — no
-    # range join, no shard_doc_ranges job per query (round-4 task #5)
-    routed = store.deletes_routed(spark)
-    if routed is not None:
-        return routed
-    ranges = store.shard_doc_ranges(spark)
-    return (store.deletes(spark)
-            .join(F.broadcast(ranges),
-                  (F.col("doc_id") >= F.col("lo"))
-                  & (F.col("doc_id") <= F.col("hi")))
-            .select("shard", "doc_id"))
+    return store.deletes_routed(spark)
 
 
 def _del_array(right: pd.DataFrame) -> np.ndarray | None:
@@ -543,38 +534,8 @@ def _deletes_runtime(spark: SparkSession, store: IndexStore, meta=None):
     return ("df", _deletes_by_shard(spark, store, meta))
 
 
-def _route_ids(spark: SparkSession, store: IndexStore,
-               ids: DataFrame):
-    """Route an arbitrary ``doc_id`` frame to its shards and pick the
-    liveDocs delivery shape: ("map", Broadcast[{shard: sorted ids}])
-    when the set fits the resident-bitset budget, else
-    ("df", (shard, doc_id)) riding the executor-to-executor cogroup.
-    Shared by the doc-values allowlist and the query_string
-    phrase-gate / phrase-exclusion id sets."""
-    ranges = store.shard_doc_ranges(spark)
-    routed = (ids.join(F.broadcast(ranges),
-                       (F.col("doc_id") >= F.col("lo"))
-                       & (F.col("doc_id") <= F.col("hi")))
-              .select("shard", "doc_id"))
-    # ONE job decides the delivery shape AND feeds the broadcast: a
-    # limit(MAX+1) collect — a separate count() would recompute the
-    # whole id-set job (for a phrase gate that's a full match pass)
-    # just to learn the size. Only the rare over-budget set pays a
-    # second (cogroup-side) evaluation.
-    rows = routed.limit(DELETES_BROADCAST_MAX + 1).collect()
-    if len(rows) <= DELETES_BROADCAST_MAX:
-        m: dict[int, list] = {}
-        for r in rows:
-            m.setdefault(int(r["shard"]), []).append(int(r["doc_id"]))
-        bc = spark.sparkContext.broadcast(
-            {s: np.sort(np.asarray(v, np.int64)) for s, v in m.items()})
-        return ("map", bc)
-    return ("df", routed)
-
-
 def _allow_runtime(spark: SparkSession, store: IndexStore, meta,
-                   doc_where: str | None,
-                   allow_df: DataFrame | None = None):
+                   doc_where: str | None):
     """Doc-values filter (ES term/terms/range queries on keyword /
     numeric metadata fields, run in the bool FILTER context): resolve
     ``doc_where`` — a Spark SQL boolean expression over docmap columns
@@ -586,7 +547,9 @@ def _allow_runtime(spark: SparkSession, store: IndexStore, meta,
     for selective filters, or ("df", (shard, doc_id) DataFrame) for
     large allowlists — which then ride the executor-to-executor
     cogroup, never the driver. The docmap scan pushes ``doc_where``
-    into parquet (predicate pushdown on the metadata columns).
+    into parquet (predicate pushdown on the metadata columns). Ids
+    route to their shard by a broadcast range join against the tiny
+    shard-range frame.
 
     Scale note: allowlist volume is proportional to filter
     selectivity. A highly UNSELECTIVE filter (e.g. 20% of a 10^12-doc
@@ -597,56 +560,49 @@ def _allow_runtime(spark: SparkSession, store: IndexStore, meta,
     are harmless here: an allow id with no postings simply never
     matches.
 
-    ``allow_df`` (a ``doc_id`` frame, e.g. the ids matching a
-    query_string must-phrase) intersects with the ``doc_where``
-    allowlist — both gates must hold. Per-commit caching applies only
-    to the pure-predicate form; id-frame gates are query-specific.
-
     Cached on the store per (build_id, docmap generation, predicate)
     so serving loops pay the resolve once per commit."""
-    if doc_where is None and allow_df is None:
+    if doc_where is None:
         return None
     key = (meta.build_id, meta.n_docs, meta.n_purged,
-           tuple(meta.delete_batches), str(doc_where))
-    if allow_df is None:
-        cached = getattr(store, "_allow_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-    if doc_where is not None:
-        ids = store.docmap(spark).filter(doc_where).select("doc_id")
-        if allow_df is not None:
-            ids = ids.join(allow_df.select("doc_id").distinct(),
-                           "doc_id", "semi")
+           tuple(meta.delete_batches), doc_where)
+    cached = getattr(store, "_allow_cache", None)
+    if cached is not None and cached[0] == key:
+        return cached[1]
+    ranges = store.shard_doc_ranges(spark)
+    routed = (store.docmap(spark).filter(doc_where).select("doc_id")
+              .join(F.broadcast(ranges),
+                    (F.col("doc_id") >= F.col("lo"))
+                    & (F.col("doc_id") <= F.col("hi")))
+              .select("shard", "doc_id"))
+    # ONE job decides the delivery shape AND feeds the broadcast: a
+    # limit(MAX+1) collect — a separate count() would recompute the
+    # id set just to learn its size. Only the rare over-budget set
+    # pays a second (cogroup-side) evaluation.
+    rows = routed.limit(DELETES_BROADCAST_MAX + 1).collect()
+    if len(rows) <= DELETES_BROADCAST_MAX:
+        m: dict[int, list] = {}
+        for r in rows:
+            m.setdefault(int(r["shard"]), []).append(int(r["doc_id"]))
+        rt = ("map", spark.sparkContext.broadcast(
+            {s: np.sort(np.asarray(v, np.int64)) for s, v in m.items()}))
     else:
-        ids = allow_df.select("doc_id").distinct()
-    rt = _route_ids(spark, store, ids)
-    if allow_df is None:
-        store._allow_cache = (key, rt)
+        rt = ("df", routed)
+    store._allow_cache = (key, rt)
     return rt
 
 
 _EMPTY_IDS = np.zeros(0, np.int64)
 
 
-def _merge_ids(a: np.ndarray | None,
-               b: np.ndarray | None) -> np.ndarray | None:
-    """Sorted union of two optional sorted id arrays (liveDocs mask ∪
-    query-level exclusion set)."""
-    if a is None:
-        return b
-    if b is None or not len(b):
-        return a
-    return np.union1d(a, b)
-
-
 def _masked_apply(spark: SparkSession, store: IndexStore, meta,
                   blocks: DataFrame, fn, schema: str,
-                  doc_where: str | None = None,
-                  allow_df: DataFrame | None = None,
-                  exclude_df: DataFrame | None = None) -> DataFrame:
+                  doc_where: str | None = None) -> DataFrame:
     """Shared shard-parallel runner for every match/score path: calls
     ``fn(pdf, deleted, allowed)`` per shard with the liveDocs mask and
-    the optional doc-values allowlist routed in.
+    the optional ``doc_where`` allowlist (see _allow_runtime) routed
+    in. These two are the only query masks; query_string phrases are
+    verified inside the workers (QueryPlan.phrase_runs).
 
     Plan shapes (identical to the historical per-path code when no
     filter is given, so delete-free plans stay byte-identical to a
@@ -655,29 +611,15 @@ def _masked_apply(spark: SparkSession, store: IndexStore, meta,
       tiny broadcasts;
     - any mask too large to broadcast: ONE cogroup against the union
       frame (shard, doc_id, allow) — flagged rows split back out in
-      the worker; the other mask may still ride its broadcast.
-
-    ``allow_df`` intersects the doc_where allowlist (see
-    _allow_runtime); ``exclude_df`` is a query-level doc-id EXCLUSION
-    set (query_string must_not phrases) that merges into the liveDocs
-    mask inside each worker — to the matcher an excluded doc is
-    indistinguishable from a deleted one."""
+      the worker; the other mask may still ride its broadcast."""
     rt = _deletes_runtime(spark, store, meta)
-    art = _allow_runtime(spark, store, meta, doc_where, allow_df)
-    ert = _route_ids(spark, store,
-                     exclude_df.select("doc_id").distinct()) \
-        if exclude_df is not None else None
+    art = _allow_runtime(spark, store, meta, doc_where)
     has_allow = art is not None
     del_bc = rt[1] if rt is not None and rt[0] == "map" else None
     al_bc = art[1] if has_allow and art[0] == "map" else None
-    ex_bc = ert[1] if ert is not None and ert[0] == "map" else None
-    has_excl_df = ert is not None and ert[0] == "df"
     rights = []
     if rt is not None and rt[0] == "df":
         rights.append(rt[1].select(
-            "shard", "doc_id", F.lit(False).alias("allow")))
-    if has_excl_df:
-        rights.append(ert[1].select(
             "shard", "doc_id", F.lit(False).alias("allow")))
     if has_allow and art[0] == "df":
         rights.append(art[1].select(
@@ -688,8 +630,6 @@ def _masked_apply(spark: SparkSession, store: IndexStore, meta,
             sh = int(key[0])
             deleted = del_bc.value.get(sh) if del_bc is not None \
                 else None
-            if ex_bc is not None:
-                deleted = _merge_ids(deleted, ex_bc.value.get(sh))
             # a filtered query's shard with no allow entries matches
             # NOTHING — empty array, never None
             allowed = (al_bc.value.get(sh, _EMPTY_IDS)
@@ -706,12 +646,12 @@ def _masked_apply(spark: SparkSession, store: IndexStore, meta,
     def run2(key, left: pd.DataFrame,
              rp: pd.DataFrame) -> pd.DataFrame:
         sh = int(key[0])
-        deleted = del_bc.value.get(sh) if del_bc is not None else None
-        if (rt is not None and del_bc is None) or has_excl_df:
-            d = rp[~rp["allow"]] if len(rp) else rp
-            deleted = _merge_ids(deleted, _del_array(d))
-        if ex_bc is not None:
-            deleted = _merge_ids(deleted, ex_bc.value.get(sh))
+        if del_bc is not None:
+            deleted = del_bc.value.get(sh)
+        elif rt is not None:
+            deleted = _del_array(rp[~rp["allow"]] if len(rp) else rp)
+        else:
+            deleted = None
         if not has_allow:
             allowed = None
         elif al_bc is not None:
@@ -806,6 +746,10 @@ def _delta_probe(keys0: np.ndarray, docs1: np.ndarray, pos1: np.ndarray,
     return np.unique(np.concatenate(hits))
 
 
+_SLOP_ON_GRAPH = ("slop is not supported on posLength-graph "
+                  "(token-filter composed) indexes")
+
+
 def _require_positions(meta, plan: QueryPlan | None,
                        phrase: bool) -> None:
     """Driver-side gate for every plan that walks positions
@@ -839,9 +783,11 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
     # per-clause positional gates (see QueryPlan.phrase_runs): which
     # group slices need an adjacency walk, and with which semantics
     runs = plan.phrase_runs or []
-    run_gis = {gi for s, n in runs for gi in range(s, s + n)}
-    srun_gis = {gi for s, n in runs if s in set(shoulds)
+    run_gis = {gi for s, n, _sl in runs for gi in range(s, s + n)}
+    srun_gis = {gi for s, n, _sl in runs if s in set(shoulds)
                 for gi in range(s, s + n)}
+    if any(sl for _s, _n, sl in runs) and pdf["pl_bytes"].notna().any():
+        raise ValueError(_SLOP_ON_GRAPH)     # same gate as _match_shard
 
     # organize blocks per group; block upper bound from (max_tf, min_dl)
     first = pdf["first_doc"].to_numpy()
@@ -1210,21 +1156,31 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
         if phrase:
             keep &= np.isin(u, _key_docs(frontier, d0))
         if runs:
-            # per-clause adjacency walks (QueryPlan.phrase_runs). Each
-            # run replays the token-graph frontier of ``phrase=True``
-            # over its own slice; masks only remove candidates (or, for
-            # 's' runs, add a separately-folded side), so every window
-            # bound stays a valid upper bound.
+            # per-clause adjacency walks (QueryPlan.phrase_runs). A
+            # slop-0 run replays the token-graph frontier of
+            # ``phrase=True`` over its own slice; a sloppy run is
+            # _match_shard's two-position move-distance probe. Masks
+            # only remove candidates (or, for 's' runs, add a
+            # separately-folded side), so every window bound stays a
+            # valid upper bound.
             znil = np.zeros(0, np.int64)
+            nil3 = (znil, znil, znil)
             in_any = np.zeros(len(u), dtype=bool)
-            for s_, n_ in runs:
-                fr = None
-                for gi in range(s_, s_ + n_):
-                    fr = _graph_step(fr, *pos_by_gi.get(
-                        gi, (znil, znil, znil)), d0)
-                    if len(fr) == 0:
-                        break
-                vdocs = _key_docs(fr, d0)
+            for s_, n_, sl in runs:
+                if sl:
+                    (od, op, _), (qd, qp, _) = (
+                        pos_by_gi.get(gi, nil3) for gi in (s_, s_ + 1))
+                    vdocs = _delta_probe(
+                        _start_keys([0], lambda _i, _c: (od, op), d0),
+                        qd, qp, range(1 - sl, 2 + sl), d0)
+                else:
+                    fr = None
+                    for gi in range(s_, s_ + n_):
+                        fr = _graph_step(fr, *pos_by_gi.get(gi, nil3),
+                                         d0)
+                        if len(fr) == 0:
+                            break
+                    vdocs = _key_docs(fr, d0)
                 if s_ in not_set:
                     if len(vdocs):
                         keep &= ~np.isin(u, vdocs)
@@ -1233,8 +1189,7 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
                 else:
                     # optional phrase: fold ITS groups' scores (ordered
                     # within the run) and add the folded side only for
-                    # verified docs — exactly the exhaustive path's
-                    # coalesce(base,0)+coalesce(side,0) summation
+                    # verified docs: base + side, the Lucene OR sum
                     inV = np.isin(u, vdocs) if len(vdocs) \
                         else np.zeros(len(u), dtype=bool)
                     in_any |= inV
@@ -1251,8 +1206,7 @@ def _wand_shard(pdf: pd.DataFrame, plan: QueryPlan, k: int, mode: str,
                         sc = np.where(inV, sc + rsc, sc)
             if has_sruns and not musts and msm >= 1:
                 # no-must admission: ≥ msm base should groups OR a
-                # verified optional phrase (the exhaustive path's
-                # full-outer-join membership)
+                # verified optional phrase
                 ds = [d for d, m_ in zip(gdocs, gkinds) if not m_]
                 cnt = np.zeros(len(u), np.int64)
                 if ds:
@@ -1422,9 +1376,7 @@ def _wand_topk(spark: SparkSession, store: IndexStore, meta,
                plan: QueryPlan, k: int, mode: str,
                phrase: bool = False,
                after: tuple | None = None,
-               doc_where: str | None = None,
-               allow_df: DataFrame | None = None,
-               exclude_df: DataFrame | None = None) -> DataFrame:
+               doc_where: str | None = None) -> DataFrame:
     """The shard-parallel WAND execution behind ``search``, taking a
     pre-built plan (so multi-field search can run it per field without
     re-analysis)."""
@@ -1452,8 +1404,7 @@ def _wand_topk(spark: SparkSession, store: IndexStore, meta,
                            allowed=allowed)
 
     topk = _masked_apply(spark, store, meta, blocks, fn,
-                         "doc_id long, score double", doc_where,
-                         allow_df, exclude_df)
+                         "doc_id long, score double", doc_where)
     return topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -1834,8 +1785,7 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
         # loops; group-1 block decodes are gated by group-0's doc
         # set exactly like the exact-phrase path.
         if has_pl:
-            raise ValueError("slop is not supported on posLength-"
-                             "graph (token-filter composed) indexes")
+            raise ValueError(_SLOP_ON_GRAPH)
         lo = int(first.min()) if len(pdf) else 0
         k0 = _start_keys([0], lambda _i, c: occ(plan.groups[0], c), lo)
         if len(k0) == 0:
@@ -1923,6 +1873,17 @@ def _match_shard(pdf: pd.DataFrame, plan: QueryPlan, mode: str,
     return done(live(acc) if acc is not None else znil)
 
 
+def _check_slop_arity(n_positions: int) -> None:
+    """Sloppy phrases are exact (Lucene move distance) for two
+    positions only; shared by match_phrase and query_string."""
+    if n_positions != 2:
+        raise ValueError(
+            "sloppy phrase matching is implemented for two-position "
+            f"queries (got {n_positions} positions); exact "
+            "Lucene semantics for longer phrases need the full "
+            "SloppyPhraseScorer repeat machinery")
+
+
 def _apply_slop(plan: QueryPlan, phrase: bool, slop: int) -> QueryPlan:
     """Validate + attach ES match_phrase ``slop`` to the plan."""
     if not slop:
@@ -1931,12 +1892,7 @@ def _apply_slop(plan: QueryPlan, phrase: bool, slop: int) -> QueryPlan:
         raise ValueError("slop must be >= 0")
     if not phrase:
         raise ValueError("slop requires phrase=True")
-    if len(plan.groups) != 2:
-        raise ValueError(
-            "sloppy phrase matching is implemented for two-position "
-            f"queries (got {len(plan.groups)} positions); exact "
-            "Lucene semantics for longer phrases need the full "
-            "SloppyPhraseScorer repeat machinery")
+    _check_slop_arity(len(plan.groups))
     plan.slop = slop
     return plan
 

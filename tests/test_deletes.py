@@ -286,9 +286,8 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     runs ONCE at delete-commit time; the QUERY-side frame must be a
     plain partition-pruned scan of the routed mirror — no join, no
     exchange, no per-query shard_doc_ranges job (at a million live
-    tombstones the per-query routing cost 8-11s vs 5.3s clean). The
-    pre-v8 fallback (no routed mirror) must keep the old shape: ranges
-    broadcast, tombstones never driver-side."""
+    tombstones the per-query routing cost 8-11s vs 5.3s clean). A
+    batch with no routed mirror raises."""
     from dataclasses import asdict
 
     from synspark.index_store import IndexMeta
@@ -308,23 +307,14 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     routed_rows = {(r.shard, r.doc_id) for r in dels.collect()}
     assert {d for _, d in routed_rows} == {1, 5, 9}
 
-    # legacy fallback (store committed before the routed mirror
-    # existed): drop the routed record from meta — the query must
-    # reconstruct routing with the ranges frame on the BROADCAST side
+    # a delete batch without its routed mirror means a damaged store
+    # (every delete writer commits the mirror with its batch): the
+    # read raises, naming the batch, instead of dropping tombstones
     meta = store.meta()
     store._write_meta(IndexMeta(**{**asdict(meta),
                                    "routed_batches": []}))
-    dels = _deletes_by_shard(spark, store)
-    plan = dels._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin BuildRight" in plan \
-        or "BroadcastHashJoin" in plan
-    # broadcast side = the aggregated ranges, not the tombstones
-    assert plan.index("deletes") < plan.index("BroadcastExchange") \
-        < plan.index("segments")
-    assert "batch#" in plan and "del-0" in plan      # partition gate
-    assert "EqualTo(term," in plan                   # pushed pseudo-term
-    # both paths route identically
-    assert {(r.shard, r.doc_id) for r in dels.collect()} == routed_rows
+    with pytest.raises(ValueError, match=r"\['del-0'\].*no shard-routed"):
+        _deletes_by_shard(spark, store)
 
 
 def test_match_ids_and_delete_by_query(spark, tmp_path_factory):

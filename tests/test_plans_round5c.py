@@ -68,7 +68,7 @@ def test_query_string_meta_pushdown(spark, pstore):
     from synspark.querystring import compile_query_string
     plan_c = compile_query_string(spark, store, "data lang:en")
     assert plan_c is not None
-    _plan_q, where, _a, _x = plan_c
+    _plan_q, where = plan_c
     ids = store.docmap(spark).filter(where).select("doc_id")
     plan = _plan(ids)
     assert "PushedFilters" in plan and "lang" in plan, plan

@@ -1,11 +1,12 @@
 """query_string mini-DSL: grammar, compilation onto the bool/WAND
-plan, phrase allow/exclude id-set gating, metadata filter context,
-prefix/fuzzy expansion clauses. Truth anchors: public Lucene
-QueryParser / ES query_string semantics (occur prefixes, boosts,
-phrase slop, field filters) and the engine's own documented
-deviations (positive phrases are MUST; metadata clauses are FILTER
-context). Scoring oracle: score_naive over the same compiled plan,
-intersected with regex-derived phrase doc sets from the raw corpus.
+plan, in-worker phrase gates (must / must_not / optional), metadata
+filter context, prefix/fuzzy expansion clauses. Truth anchors:
+public Lucene QueryParser / ES query_string semantics (occur
+prefixes, boosts, phrase slop, field filters) and the engine's own
+documented deviations (positive phrases are MUST; metadata clauses
+are FILTER context). Scoring oracle: score_naive over the same
+compiled plan, intersected with regex-derived phrase doc sets from
+the raw corpus.
 """
 
 import re
@@ -223,12 +224,15 @@ def test_exclusion_merges_with_deletes(spark, tmp_path_factory):
 
 
 def test_df_routed_gates(spark, qst, monkeypatch):
-    """Force the cogroup (df) path for the phrase allow AND exclude
-    sets: results identical to the broadcast path."""
+    """Force the cogroup (df) path for the lang:en allowlist beside
+    in-worker phrase runs: results identical to the broadcast path."""
     import synspark.query as Q
     want = _pairs(query_string(
         spark, qst, 'data "key order" -"slow scan" lang:en', k=50))
     monkeypatch.setattr(Q, "DELETES_BROADCAST_MAX", -1)
+    # the broadcast allowlist is cached per commit; drop it so the
+    # second run really resolves the over-budget (cogroup) shape
+    monkeypatch.setattr(qst, "_allow_cache", None, raising=False)
     got = _pairs(query_string(
         spark, qst, 'data "key order" -"slow scan" lang:en', k=50))
     assert got == want and got
@@ -349,47 +353,55 @@ def test_optional_and_must_phrase_mix(spark, qst):
 
 
 def test_phrase_runs_in_worker_equal_legacy_gating(spark, qst):
-    """Round 6: slop-0 phrases verify INSIDE the WAND workers
-    (plan.phrase_runs) instead of separate match_ids jobs. Pin (a) the
-    compiled plan shape — runs recorded, no id-set gates spawned — and
-    (b) exact (doc_id, score) parity with the legacy compose-of-passes
-    execution rebuilt by hand."""
-    from synspark.query import _wand_topk, match_ids
+    """Every phrase verifies INSIDE the WAND workers
+    (plan.phrase_runs). Pin (a) the compiled plan shape — one run per
+    phrase, tagged with its occur and slop — and (b) exact (doc_id,
+    score) parity with the equivalent plan_bool run through the naive
+    scorer and gated by the regex-derived phrase doc sets."""
     from synspark.querystring import compile_query_string
     qs = '+data "key order" -"slow scan" lang:en sort^2'
-    plan, where, allow_df, exclude_df = \
-        compile_query_string(spark, qst, qs)
+    plan, where = compile_query_string(spark, qst, qs)
     assert plan.phrase_runs and len(plan.phrase_runs) == 2
-    assert allow_df is None and exclude_df is None
-    kinds_at = [plan.kinds[s] for s, _n in plan.phrase_runs]
+    kinds_at = [plan.kinds[s] for s, _n, _sl in plan.phrase_runs]
     assert sorted(kinds_at) == ["m", "n"]
+    assert [sl for _s, _n, sl in plan.phrase_runs] == [0, 0]
     got = _pairs(query_string(spark, qst, qs, k=300))
-    # legacy execution: same scoring groups, id-set gates from
-    # match_ids (slop>0 phrases still run this path in production)
+    texts = _texts(spark, qst)
+    allow = _phrase_docs(texts, "key order")
+    excl = _phrase_docs(texts, "slow scan")
     lplan = plan_bool(spark, qst,
                       must=[("data", 1.0), ("key order", 1.0)],
                       should=[("sort", 2.0)], cfg=CFG)
-    allow = match_ids(spark, qst, "key order", mode="and", phrase=True)
-    excl = match_ids(spark, qst, "slow scan", mode="and", phrase=True)
-    want = _pairs(_wand_topk(spark, qst, qst.meta(), lplan, 300, "or",
-                             False, None, where, allow, excl))
-    assert got == want
+    want = [(d, s) for d, s in
+            _pairs(score_naive(spark, qst, "", k=10_000, plan=lplan,
+                               doc_where=where))
+            if d in allow and d not in excl][:300]
+    assert got and got == want
 
 
 def test_optional_phrase_runs_equal_exhaustive(spark, qst):
-    """Slop-0 optional phrases ride the WAND pass as 's' runs; a
-    sloppy optional phrase forces the legacy exhaustive path. Both
-    executions must produce identical (doc_id, score) lists — '"key
-    order"~0' and '"key order"~1' differ only where slop-1 adjacency
-    genuinely differs, so compare the ~0 fast path against the
-    exhaustive path forced via an equivalent sloppy query that has the
-    same matches (slop 0 phrase + a dummy sloppy phrase that matches
-    nothing)."""
+    """Optional phrases of any slop ride the WAND pass as 's' runs.
+    An optional sloppy phrase that matches nothing must leave the
+    (doc_id, score) list of the query without it unchanged: its groups
+    widen the window bounds but never add score or admit a doc."""
     fast = _pairs(query_string(spark, qst, 'merge "key order"', k=300,
                                optional_phrases=True))
-    # 'zz qq' (two 1-gram blocks) matches nothing, but its slop>0
-    # forces EVERY phrase onto the exhaustive path
+    # 'zz qq' (two 1-gram blocks) matches nothing
     slow = _pairs(query_string(spark, qst,
                                'merge "key order" "zz qq"~1',
                                k=300, optional_phrases=True))
     assert fast and fast == slow
+
+
+def test_optional_phrase_after_pagination(spark, qst):
+    """optional_phrases=True pages with ``after`` like every other
+    query_string: page 2 is ranks 11-20 of the k=20 list."""
+    qs = 'merge "key order"'
+    top = query_string(spark, qst, qs, k=20,
+                       optional_phrases=True).collect()
+    assert len(top) == 20
+    cur = (top[9].score, top[9].doc_id)
+    page2 = query_string(spark, qst, qs, k=10, after=cur,
+                         optional_phrases=True).collect()
+    assert [(r.doc_id, r.score) for r in page2] == \
+        [(r.doc_id, r.score) for r in top[10:]]

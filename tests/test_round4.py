@@ -316,6 +316,18 @@ def test_multiword_rule_phrase_truth_table(spark, tmp_path_factory):
                  groups=[["in"], ["usa"], ["today"]]).collect()
     assert [r["doc_id"] for r in got] == [dm["r0"]]
 
+    # a sloppy phrase's move distance is undefined over tokens that
+    # span several positions: match_phrase and query_string both
+    # refuse it instead of guessing
+    from synspark.query import match_ids
+    from synspark.querystring import query_string
+    with pytest.raises(Exception, match="slop is not supported on "
+                                        "posLength"):
+        match_ids(spark, st, "usa today", phrase=True, slop=1).collect()
+    with pytest.raises(Exception, match="slop is not supported on "
+                                        "posLength"):
+        query_string(spark, st, '"usa today"~1').collect()
+
     # pl_bytes actually persisted (spans > 1 exist)
     segs = spark.read.parquet(str(out / "segments"))
     n_pl = segs.filter(F.col("pl_bytes").isNotNull()).count()

@@ -150,16 +150,26 @@ def test_purge_merge_sound_with_legacy_inert_tombstones(
     assert store.meta().n_purged == 25
 
     # forge a legacy inert tombstone batch: bypass _write_tombstones'
-    # purged-anti-join gate by writing the partition + meta directly
-    (spark.createDataFrame([(55,), (60,), (70,)], "doc_id long")
-     .withColumn("batch", F.lit("del-legacy"))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch")
-     .parquet(str(store.path / "deletes")))
+    # purged-anti-join gate by writing the partition, its shard-routed
+    # mirror (the range join every delete writer runs) + meta directly
+    legacy = spark.createDataFrame([(55,), (60,), (70,)], "doc_id long")
+    ranges = store.shard_doc_ranges(spark)
+    for root_name, frame in (
+            ("deletes", legacy),
+            ("deletes_routed",
+             legacy.join(F.broadcast(ranges),
+                         (F.col("doc_id") >= F.col("lo"))
+                         & (F.col("doc_id") <= F.col("hi")))
+             .select("shard", "doc_id"))):
+        (frame.withColumn("batch", F.lit("del-legacy"))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch")
+         .parquet(str(store.path / root_name)))
     mp = store.path / "meta.json"
     meta_d = json.loads(mp.read_text())
     meta_d["delete_batches"] = meta_d["delete_batches"] + ["del-legacy"]
+    meta_d["routed_batches"] = meta_d["routed_batches"] + ["del-legacy"]
     meta_d["n_deleted"] = meta_d["n_deleted"] + 3
     mp.write_text(json.dumps(meta_d))
     # also one REAL tombstone so the purge drops a live doc too
