@@ -455,10 +455,11 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3,
     scaling caveat). All candidates are verified by exact bit_count, so
     every valid parameterization returns the SAME pair set.
 
-    ``sim`` is expected to hold one row per doc (what ``simhash()``
-    emits); duplicated (id, simhash) input rows would duplicate pair
-    rows on the small-C fast path (the wide-C path's trailing distinct
-    still collapses them).
+    Output contract, for every parameterization: one row per pair
+    ``a < b`` within ``max_hamming``, emitted from the pair's first
+    colliding combo table, so no dedup exchange runs. ``sim`` is
+    expected to hold one row per doc (what ``simhash()`` emits);
+    duplicated (id, simhash) input rows duplicate pair rows.
 
     ``split_hot_buckets`` (round 6b, guide §2 skew): a sort-merge join
     enumerates each bucket's quadratic pair volume in ONE task, so a
@@ -476,6 +477,7 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3,
     why it is opt-in: at <= 50k docs the skew it spreads is smaller
     than that overhead. Output is identical with or without it.
     """
+    from functools import reduce
     from itertools import combinations
     if split_hot_buckets is not None and split_hot_buckets < 1:
         raise ValueError(f"split_hot_buckets must be >= 1 (a cell "
@@ -550,43 +552,31 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3,
                          F.col("simhash").alias("ha"), "_combo", "_key")
         b = keyed.select(F.col(id_col).alias("b"),
                          F.col("simhash").alias("hb"), "_combo", "_key")
-    # hamming filter BEFORE the dedup shuffle: the bucket join's raw
-    # pair volume is quadratic in bucket population (240M pair rows at
-    # sf1.0 — templated text makes block values hot), and the filter
-    # is a per-row function of (ha, hb) so filter-then-distinct is
-    # row-identical to distinct-then-filter. The filter runs inside
-    # the join's codegen stage; only the surviving near-dup pairs ever
-    # reach an exchange (guide §2.3: shuffle fewer bytes).
+    # hamming filter inside the join's codegen stage: the bucket join's
+    # raw pair volume is quadratic in bucket population (240M pair rows
+    # at sf1.0 — templated text makes block values hot); only the
+    # surviving near-dup pairs leave it (guide §2.3: shuffle fewer
+    # bytes).
     x = F.col("ha").bitwiseXOR(F.col("hb"))
     ham = F.bit_count(x)
     j = (a.join(b, join_keys).filter(F.col("a") < F.col("b"))
          .withColumn("hamming", ham)
          .filter(F.col("hamming") <= max_hamming))
-    if len(combos) <= 8:
-        # round 6b: emit each surviving pair ONLY from its FIRST
-        # colliding combo table instead of deduping afterwards — a
-        # pair with hamming <= max_hamming collides wherever all of a
-        # combo's key blocks are zero in x = ha XOR hb, a per-row
-        # predicate, so the join output is unique by construction and
-        # the .distinct() exchange (the old plan shuffled every
-        # surviving doc pair times its combo multiplicity — tens of
-        # millions of rows at sf1.0) disappears entirely (guide §2.3:
-        # dedupe before the shuffle; here the dedup is free). Kept as
-        # a WHEN chain over the combo id: the chain is O(C^2) in
-        # expression terms, trivial at the default C(4,1)=4 but a
-        # multi-second Catalyst/codegen tax by C=35, hence the C-cap
-        # with the classic distinct as the wide-C fallback.
-        bz = [F.shiftrightunsigned(x, width * c)
-              .bitwiseAND(F.lit(mask)) == 0 for c in range(n_blocks)]
-        from functools import reduce
-        cexp = F.when(F.col("_combo") == 0, F.lit(True))
-        for ci in range(1, len(combos)):
-            not_earlier = reduce(
-                lambda p, q: p & q,
-                [~reduce(lambda u, v: u & v,
-                         [bz[c] for c in combos[cj]])
-                 for cj in range(ci)])
-            cexp = cexp.when(F.col("_combo") == ci, not_earlier)
-        return (j.filter(cexp.otherwise(F.lit(False)))
-                .select("a", "b", "hamming"))
-    return j.select("a", "b", "hamming").distinct()
+    # emit each surviving pair ONLY from its FIRST colliding combo
+    # table, so the join output is unique by construction and needs no
+    # dedup exchange (guide §2.3: dedupe before the shuffle; here the
+    # dedup is free). combinations() is lexicographic, so combo c is
+    # the first whose key blocks are all zero in x iff its blocks are
+    # the blocks_per_key LOWEST zero blocks of x: with zmask bit i set
+    # iff block i of x is zero, (zmask & prefix[c]) == blocks[c], where
+    # prefix[c] covers blocks 0..max(c). n_blocks comparisons plus two
+    # literal-array lookups per row, for any C.
+    zmask = reduce(lambda u, v: u.bitwiseOR(v), [
+        F.when(F.shiftrightunsigned(x, width * c).bitwiseAND(F.lit(mask))
+               == 0, F.lit(1 << c)).otherwise(F.lit(0))
+        for c in range(n_blocks)])
+    prefix = F.array(*[F.lit((1 << (max(cb) + 1)) - 1) for cb in combos])
+    own = F.array(*[F.lit(sum(1 << b for b in cb)) for cb in combos])
+    combo = F.col("_combo")
+    first = zmask.bitwiseAND(prefix[combo]) == own[combo]
+    return j.filter(first).select("a", "b", "hamming")

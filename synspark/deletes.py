@@ -17,10 +17,10 @@ This module reproduces both phases over the parquet store:
 - ``delete_docs`` writes tombstoned ``doc_id``s to a new
   ``deletes/batch=del-K`` partition and commits them through the one
   atomic ``meta.json`` write (``delete_batches``/``n_deleted``).
-  Query paths (search / search_batch / count_matches / score_naive)
-  route each shard's tombstones to its worker with a broadcast range
-  join + cogroup — the tombstone set never rides through the driver
-  and scales with churn, not corpus.
+  Each tombstone is routed to its shard once, at commit, by a
+  broadcast range join against the manifest's shard ledger
+  (``deletes_routed/``); query paths hand each shard worker its
+  tombstones as a broadcast map, or by cogroup when the set is large.
 - ``upsert_docs`` is ES's index-by-key: resolve the keys' current
   doc_ids against the COMMITTED docmap, append the new versions, and
   tombstone the old ids in the SAME meta commit (a crash anywhere
@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from .codec import decode_selected, encode_sorted_batch
 from .index_store import (FORMAT_VERSION, INITIAL_BATCH, IndexMeta,
-                          IndexStore, _digest_expr, _run_concurrent,
+                          IndexStore, _run_concurrent, _shard_entries,
                           append_to_index)
 
 
@@ -123,7 +123,7 @@ def _write_tombstones(spark: SparkSession, store: IndexStore,
     # (shard, doc_id) straight off parquet instead of re-routing per
     # query. Same staging protocol — visible only through the caller's
     # meta commit listing `part` in routed_batches. Ranges come from
-    # the COMMITTED meta (segments() gates on it), which is exactly
+    # the ledger of the COMMITTED meta's live shards, which is exactly
     # the id space the bound restricted `new` to.
     ranges = store.shard_doc_ranges(spark)
     (new.join(F.broadcast(ranges),
@@ -399,17 +399,12 @@ def auto_merge(spark: SparkSession, store: IndexStore,
 def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
     from .index_store import _clear_uncommitted
     from .indexer import DOCSTATS_TERM, SEGMENT_SCHEMA
-    from .query import _deletes_by_shard
 
     meta = store.meta()
-    dels = _deletes_by_shard(spark, store, meta)
-    if dels is None:
+    if not meta.delete_batches:
         return store  # no tombstones anywhere
-    counts = {int(r["shard"]): int(r["nd"]) for r in
-              store.segments(spark)
-              .filter(F.col("term") == DOCSTATS_TERM)
-              .groupBy("shard").agg(F.sum("n_docs").alias("nd"))
-              .collect()}
+    dels = store.deletes_routed(spark)
+    counts = {s: n for s, (_lo, _hi, n) in store.ledger(meta).items()}
     delc = {int(r["shard"]): int(r["n"]) for r in
             dels.groupBy("shard").agg(F.count("*").alias("n")).collect()}
     if shards is None:
@@ -532,33 +527,12 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
          .parquet(str(store.path / "deletes_routed")))
     remaining.unpersist()
 
-    # manifest lineage for the replacement shards; mark originals dead
-    lineage = (spark.read.parquet(seg_dir)
-               .filter(F.col("shard").isin(sorted(new_ids.values())))
-               .groupBy("shard")
-               .agg(F.count("*").alias("rows"),
-                    (F.sum(F.length("doc_bytes"))
-                     + F.sum(F.length("tf_bytes"))
-                     + F.sum(F.length("dl_bytes"))).alias("bytes"),
-                    _digest_expr())
-               .collect())
+    # manifest entries for the replacement shards (invisible until the
+    # meta commit raises n_shards)
     build_id = uuid.uuid4().hex
     manifest = store.manifest()
-    found = set()
-    for r in lineage:
-        found.add(int(r["shard"]))
-        manifest["shards"][str(int(r["shard"]))] = {
-            "status": "done", "rows": int(r["rows"]),
-            "bytes": int(r["bytes"] or 0), "digest": int(r["digest"]),
-            "build_id": build_id}
-    for k in new_ids.values():
-        if k not in found:  # fully-deleted shard: empty replacement
-            manifest["shards"][str(k)] = {
-                "status": "done", "rows": 0, "bytes": 0, "digest": 0,
-                "build_id": build_id}
-    for old in cand:
-        if str(old) in manifest["shards"]:
-            manifest["shards"][str(old)]["status"] = "dead"
+    manifest["shards"].update(_shard_entries(
+        spark.read.parquet(seg_dir), new_ids.values(), build_id))
     store._write_manifest(manifest)
 
     total_dl = meta.total_dl - dl_purged
@@ -583,6 +557,12 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
            + ([pg_part] if n_purged_now else []),
            "source": f"{meta.source} + {source}",
            "created_utc": time.time()}))
+    # mark the originals dead only after the commit: a crash before it
+    # leaves them live in meta AND in the manifest, so a retry still
+    # finds them in the ledger
+    for old in cand:
+        manifest["shards"][str(old)]["status"] = "dead"
+    store._write_manifest(manifest)
     return store
 
 
@@ -684,13 +664,12 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     over live docs. Equivalent to a fresh ``build_index`` over the
     live corpus (test-pinned). The old index is untouched (crash-safe,
     like ``compact_index``)."""
-    from .indexer import DOCSTATS_TERM, SEGMENT_SCHEMA
-    from .query import _deletes_by_shard
+    from .indexer import DOCSTATS_TERM, SEGMENT_SCHEMA, decode_docstats_rows
 
     meta = store.meta()
-    dels = _deletes_by_shard(spark, store, meta)
-    if dels is None:
+    if not meta.delete_batches:
         raise ValueError("no tombstones to purge — use compact_index")
+    dels = store.deletes_routed(spark)
 
     # per-shard live counts from ACTUAL survivors — decoded pseudo-row
     # doc_ids anti-joined with the tombstones, never "row count minus
@@ -702,24 +681,20 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     # test_purge_after_inert_tombstones). Shards are ordered by DOC
     # RANGE, not id: incremental merge_shards leaves replacement
     # shards at high ids covering mid-range docs, and the dense
-    # renumbering below requires range-ascending traversal.
-    from .indexer import decode_docstats_rows
-    lows = {int(r["shard"]): int(r["lo"]) for r in
-            (store.segments(spark)
-             .filter(F.col("term") == DOCSTATS_TERM)
-             .groupBy("shard").agg(F.min("first_doc").alias("lo"))
-             .collect())}
-    live = {s: 0 for s in lows}
-    for r in (decode_docstats_rows(
-            store.segments(spark).filter(F.col("term") == DOCSTATS_TERM),
-            keep_shard=True)
-            .join(store.deletes(spark), "doc_id", "left_anti")
-            .groupBy("shard").agg(F.count("*").alias("nl")).collect()):
+    # renumbering below requires range-ascending traversal (the
+    # ledger's lo).
+    ledger = store.ledger(meta)
+    surv = (decode_docstats_rows(
+        store.segments(spark).filter(F.col("term") == DOCSTATS_TERM),
+        keep_shard=True)
+        .join(store.deletes(spark), "doc_id", "left_anti"))
+    live = {s: 0 for s in ledger}
+    for r in surv.groupBy("shard").agg(F.count("*").alias("nl")).collect():
         live[int(r["shard"])] = int(r["nl"])
     n_live = sum(live.values())
     per = docs_per_shard or max(1, -(-n_live // max(1, min(
-        len(lows), 8))))
-    range_order = sorted(lows, key=lambda s: lows[s])
+        len(ledger), 8))))
+    range_order = sorted(ledger, key=lambda s: ledger[s][0])
     mapping = []           # (old_shard, new_shard)
     new_id, acc = 0, 0
     for old in range_order:
@@ -772,20 +747,10 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     # incremental merge_shards the docstats/docmap tables still carry
     # stale rows for merged-away docs (metadata GC happens here), and
     # only the pseudo-rows are always consistent with the postings.
-    from .indexer import decode_docstats_rows
-    ranges = store.shard_doc_ranges(spark)
     off_df = spark.createDataFrame(
         [(s, old_off[s]) for s in sorted(old_off)], "shard int, off long")
-    pseudo_stats = decode_docstats_rows(
-        store.segments(spark).filter(F.col("term") == DOCSTATS_TERM))
-    surv = (pseudo_stats
-            .join(store.deletes(spark), "doc_id", "left_anti")
-            .join(F.broadcast(ranges),
-                  (F.col("doc_id") >= F.col("lo"))
-                  & (F.col("doc_id") <= F.col("hi")))
-            .join(F.broadcast(off_df), "shard"))
     w = Window.partitionBy("shard").orderBy("doc_id")
-    id_map = surv.withColumn(
+    id_map = surv.join(F.broadcast(off_df), "shard").withColumn(
         "new_doc_id",
         (F.col("off") + F.row_number().over(w) - F.lit(1)).cast("long")) \
         .select("doc_id", "new_doc_id", "dl")
@@ -823,24 +788,10 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     total_dl = int(row["t"] or 0)
 
     build_id = uuid.uuid4().hex
-    stats = (spark.read.parquet(str(dst.path / "segments"))
-             .groupBy("shard")
-             .agg(F.count("*").alias("rows"),
-                  (F.sum(F.length("doc_bytes"))
-                   + F.sum(F.length("tf_bytes"))
-                   + F.sum(F.length("dl_bytes"))).alias("bytes"),
-                  _digest_expr())
-             .collect())
-    manifest = {"shards": {str(int(r["shard"])): {
-        "status": "done", "rows": int(r["rows"]),
-        "bytes": int(r["bytes"] or 0), "digest": int(r["digest"]),
-        "build_id": build_id} for r in stats},
-        "batches": dict(meta.batches)}
-    for k in range(n_new):   # a fully-deleted new shard is legal
-        manifest["shards"].setdefault(str(k), {
-            "status": "done", "rows": 0, "bytes": 0, "digest": 0,
-            "build_id": build_id})
-    dst._write_manifest(manifest)
+    # a fully-deleted new shard is legal: it gets the empty entry
+    dst._write_manifest({"shards": _shard_entries(
+        spark.read.parquet(str(dst.path / "segments")), range(n_new),
+        build_id), "batches": dict(meta.batches)})
     dst._write_meta(IndexMeta(
         build_id=build_id, n_docs=n_live,
         avgdl=(total_dl / n_live) if (n_live and total_dl) else 1.0,

@@ -6,7 +6,9 @@ On-disk layout (parquet everywhere; Iceberg-ready — same schemas):
   <index_dir>/
     meta.json           build lineage + global stats (N, avgdl, cfg,
                         dict fingerprint, source, build_id)
-    manifest.json       per-shard checkpoint: rows/bytes/digest/status
+    manifest.json       per-shard checkpoint + ledger: status, lineage
+                        (rows/bytes/digest) and the shard's doc-id
+                        range lo..hi with its doc count ``docs``
     docmap/             doc_id, repo, path, commit, lang, content_sha256
     docstats/           doc_id, dl
     termstats/          term, df, cf  (query planning + idf)
@@ -20,6 +22,12 @@ shard is also the resume/checkpoint granularity — a crashed build
 restarts and recomputes only missing shards. Every stage is
 deterministic (no sampled partitioners, seeded generators), so a
 resumed index is byte-identical to a single-shot build.
+
+Every writer commits a shard's manifest entry through one helper
+(``_shard_entries``), so each shard's doc range is recorded once, when
+the shard is written; readers that route ids to shards (tombstones,
+``doc_where`` allowlists, merges, compaction) read it from the
+manifest (``IndexStore.ledger``) without a Spark job.
 
 Within shard files, rows sorted by term -> parquet row-group min/max
 stats prune term lookups at query time (predicate pushdown).
@@ -98,7 +106,9 @@ DEFAULT_SHARDS = 8
 #  deletes.py for the two-phase delete -> purge-merge semantics))
 #  v8: imp_bytes quantized-impact column in SEGMENT_SCHEMA + routed
 #      tombstone mirror (deletes_routed/, meta.routed_batches)
-FORMAT_VERSION = 8
+#  v9: manifest shard entries carry the shard ledger lo/hi/docs, and
+#      term-layout builds write docstats pseudo rows too
+FORMAT_VERSION = 9
 INITIAL_BATCH = "initial"
 
 
@@ -181,11 +191,12 @@ class IndexMeta:
     purged_batches: list = field(default_factory=list)
     # delete batches that ALSO have a shard-routed mirror under
     # deletes_routed/ (shard, doc_id): the broadcast range join that
-    # assigns each tombstone to its doc-range shard runs ONCE at
-    # delete-commit time instead of inside every query (round-4 task
-    # #5 — at a million live tombstones the per-query routing cost
-    # 8-11s vs 5.3s clean). Writers keep this equal to delete_batches;
-    # readers reject a store with a batch that has no mirror.
+    # assigns each tombstone to its doc-range shard (ranges from the
+    # manifest ledger, no Spark job) runs ONCE at delete-commit time
+    # instead of inside every query (round-4 task #5 — at a million
+    # live tombstones the per-query routing cost 8-11s vs 5.3s clean).
+    # Writers keep this equal to delete_batches; readers reject a
+    # store with a batch that has no mirror.
     routed_batches: list = field(default_factory=list)
 
 
@@ -194,6 +205,37 @@ def _digest_expr():
         "bit_xor(xxhash64(term, block_seq, first_doc, last_doc, "
         "n_docs, max_tf, sum_tf, min_dl, doc_bytes, tf_bytes, dl_bytes))"
     ).alias("digest")
+
+
+def _shard_entries(segs: DataFrame, shards, build_id: str) -> dict:
+    """Manifest entries {str(shard): entry} for the written ``shards``
+    of ``segs``, from one groupBy("shard") job: lineage (rows, bytes,
+    digest) and the ledger — ``lo``/``hi``, the min first_doc / max
+    last_doc of the shard's docstats pseudo rows, and ``docs``, the sum
+    of their n_docs. Every writer records shards only through here. A
+    shard with no docs (empty, or every doc purged) gets the bare
+    default entry and no range."""
+    shards = sorted(set(shards))
+    out = {str(k): {"status": "done", "rows": 0, "bytes": 0, "digest": 0,
+                    "build_id": build_id} for k in shards}
+    ds = F.col("term") == F.lit(DOCSTATS_TERM)
+    for r in (segs.filter(F.col("shard").isin(shards))
+              .groupBy("shard")
+              .agg(F.count("*").alias("rows"),
+                   (F.sum(F.length("doc_bytes"))
+                    + F.sum(F.length("tf_bytes"))
+                    + F.sum(F.length("dl_bytes"))).alias("bytes"),
+                   _digest_expr(),
+                   F.min(F.when(ds, F.col("first_doc"))).alias("lo"),
+                   F.max(F.when(ds, F.col("last_doc"))).alias("hi"),
+                   F.sum(F.when(ds, F.col("n_docs"))).alias("docs"))
+              .collect()):
+        e = out[str(int(r["shard"]))]
+        e.update(rows=int(r["rows"]), bytes=int(r["bytes"] or 0),
+                 digest=int(r["digest"]))
+        if r["docs"]:
+            e.update(lo=int(r["lo"]), hi=int(r["hi"]), docs=int(r["docs"]))
+    return out
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -216,6 +258,9 @@ class IndexStore:
         # index build changes. Cuts one Spark job per repeated query.
         self._df_cache: dict = {}
         self._df_cache_build: str | None = None
+        # (commit, {mask key: broadcast | frame}): query masks resolved
+        # for the current commit (query._resolve_mask)
+        self._masks = None
 
     # ---------- metadata ----------
     def meta(self) -> IndexMeta:
@@ -390,19 +435,32 @@ class IndexStore:
         return df.filter(F.col("batch").isin(meta.purged_batches)) \
             .select("doc_id")
 
+    def _live_entries(self, meta: IndexMeta) -> dict:
+        """{shard: manifest entry} of the live shards — status done,
+        below the committed n_shards, not replaced by a merge: the
+        gate segments() applies."""
+        return {int(k): v for k, v in self.manifest()["shards"].items()
+                if v.get("status") == "done" and int(k) < meta.n_shards
+                and int(k) not in meta.dead_shards}
+
+    def ledger(self, meta: IndexMeta | None = None) -> dict:
+        """{shard: (lo, hi, docs)} for every live shard holding docs,
+        read from the manifest (written with the shard by
+        ``_shard_entries``) — no Spark job. Shards partition the id
+        space into disjoint contiguous ranges."""
+        return {s: (v["lo"], v["hi"], v["docs"]) for s, v in
+                self._live_entries(meta or self.meta()).items()
+                if v.get("docs")}
+
     def shard_doc_ranges(self, spark: SparkSession) -> DataFrame:
-        """(shard, lo, hi) — each shard's doc-id range, from the
-        docstats pseudo-term rows (DOCSTATS_TERM sorts first within
-        every shard file, so the term predicate prunes to ~one row
-        group per file). Shards partition the id space into disjoint
-        contiguous ranges, so tombstones route to exactly one shard by
-        a range join against this tiny frame."""
-        from .indexer import DOCSTATS_TERM
-        return (self.segments(spark)
-                .filter(F.col("term") == F.lit(DOCSTATS_TERM))
-                .groupBy("shard")
-                .agg(F.min("first_doc").alias("lo"),
-                     F.max("last_doc").alias("hi")))
+        """(shard, lo, hi, docs) — the ledger as a local frame (no
+        Spark job to build it). Ids route to exactly one shard by a
+        broadcast range join against it: tombstones at delete commit,
+        ``doc_where`` allowlists at query time."""
+        return spark.createDataFrame(
+            [(s, lo, hi, n) for s, (lo, hi, n)
+             in sorted(self.ledger().items())],
+            "shard int, lo long, hi long, docs long")
 
     def docmap(self, spark: SparkSession) -> DataFrame:
         meta = self.meta()
@@ -417,27 +475,19 @@ class IndexStore:
         shard layout, and on-disk lineage totals — all from meta + the
         manifest, no Spark job."""
         meta = self.meta()
-        man = self.manifest()
-        live_shards = [int(k) for k, v in man["shards"].items()
-                       if v.get("status") == "done"
-                       and int(k) < meta.n_shards
-                       and int(k) not in meta.dead_shards]
+        live = self._live_entries(meta)
         return {
             "n_docs": meta.n_docs,
             "n_live": meta.n_docs - meta.n_deleted - meta.n_purged,
             "n_deleted": meta.n_deleted,     # tombstoned, pre-merge
             "n_purged": meta.n_purged,       # removed by partial merges
             "n_shards": meta.n_shards,
-            "n_live_shards": len(live_shards),
+            "n_live_shards": len(live),
             "dead_shards": list(meta.dead_shards),
             "avgdl": meta.avgdl,
             "total_dl": meta.total_dl,
-            "segment_rows": sum(v.get("rows", 0)
-                                for k, v in man["shards"].items()
-                                if int(k) in set(live_shards)),
-            "segment_bytes": sum(v.get("bytes", 0)
-                                 for k, v in man["shards"].items()
-                                 if int(k) in set(live_shards)),
+            "segment_rows": sum(v.get("rows", 0) for v in live.values()),
+            "segment_bytes": sum(v.get("bytes", 0) for v in live.values()),
             "stats_batches": len(meta.stats_batches),
             "delete_batches": len(meta.delete_batches),
             "format": meta.format,
@@ -687,21 +737,11 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
     segs_all = spark.read.parquet(seg_dir)
     ts_dir = store.path / "termstats"
     build_id = uuid.uuid4().hex
-    stats_out: list = []
 
     def _manifest_job():
-        if not missing:
-            return
-        stats_out.extend(
-            spark.read.parquet(seg_dir)
-            .filter(F.col("shard").isin(missing))
-            .groupBy("shard")
-            .agg(F.count("*").alias("rows"),
-                 (F.sum(F.length("doc_bytes")) +
-                  F.sum(F.length("tf_bytes")) +
-                  F.sum(F.length("dl_bytes"))).alias("bytes"),
-                 _digest_expr())
-            .collect())
+        if missing:
+            manifest["shards"].update(
+                _shard_entries(segs_all, missing, build_id))
 
     obs_dl: list = []
 
@@ -736,20 +776,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
         _run_concurrent(_manifest_job, _docstats_job, _termstats_job)
 
     if missing:
-        # checkpoint: per-shard rows/bytes/digest lineage (manifest
-        # still commits before meta — the real commit point)
-        found = set()
-        for r in stats_out:
-            found.add(int(r["shard"]))
-            manifest["shards"][str(int(r["shard"]))] = {
-                "status": "done", "rows": int(r["rows"]),
-                "bytes": int(r["bytes"] or 0), "digest": int(r["digest"]),
-                "build_id": build_id}
-        for k in missing:
-            if k not in found:  # shard legitimately empty
-                manifest["shards"][str(k)] = {
-                    "status": "done", "rows": 0, "bytes": 0, "digest": 0,
-                    "build_id": build_id}
+        # checkpoint: per-shard lineage + ledger (manifest still
+        # commits before meta — the real commit point)
         store._write_manifest(manifest)
 
     with _timed("C.avgdl"):
@@ -1026,17 +1054,12 @@ def _append_locked(spark, store, new_corpus, syn, docs_per_shard,
     # jobs over the same partition-pruned scan, overlapped) ----
     new_segs = new_shard_segments(spark, store, old_shards,
                                   new_total_shards)
-    lineage: list = []
+    entries: dict = {}
     dl_sum: list = []
 
     def _lineage_job():
-        lineage.extend(
-            new_segs.groupBy("shard")
-            .agg(F.count("*").alias("rows"),
-                 (F.sum(F.length("doc_bytes")) + F.sum(F.length("tf_bytes"))
-                  + F.sum(F.length("dl_bytes"))).alias("bytes"),
-                 _digest_expr())
-            .collect())
+        entries.update(_shard_entries(
+            new_segs, range(old_shards, new_total_shards), build_id))
 
     def _docstats_job():
         delta = decode_docstats_rows(
@@ -1077,18 +1100,7 @@ def _append_locked(spark, store, new_corpus, syn, docs_per_shard,
     # shard lineage may land in the manifest before the commit — those
     # shards are invisible until meta advances n_shards
     manifest = store.manifest()
-    found = set()
-    for r in lineage:
-        found.add(int(r["shard"]))
-        manifest["shards"][str(int(r["shard"]))] = {
-            "status": "done", "rows": int(r["rows"]),
-            "bytes": int(r["bytes"] or 0), "digest": int(r["digest"]),
-            "build_id": build_id}
-    for k in range(old_shards, new_total_shards):
-        if k not in found:  # shard legitimately empty
-            manifest["shards"][str(k)] = {
-                "status": "done", "rows": 0, "bytes": 0, "digest": 0,
-                "build_id": build_id}
+    manifest["shards"].update(entries)
     store._write_manifest(manifest)
 
     # ---- THE commit: one meta.json write publishes docs, shards,
@@ -1187,8 +1199,6 @@ def compact_index(spark: SparkSession, store: IndexStore, out_dir: str,
     over live docs only, exactly Lucene's merge applying liveDocs —
     delegated to ``deletes.purge_merge``.
     """
-    from .indexer import DOCSTATS_TERM  # local import to avoid cycle noise
-
     meta = store.meta()
     if meta.delete_batches:
         from .deletes import purge_merge
@@ -1196,29 +1206,21 @@ def compact_index(spark: SparkSession, store: IndexStore, out_dir: str,
                            docs_per_shard=docs_per_shard)
     per = docs_per_shard or max(1, (meta.n_docs + DEFAULT_SHARDS - 1)
                                 // DEFAULT_SHARDS)
-    # per-shard doc counts from the docstats pseudo-rows (tiny: one row
-    # group per shard, never the vocabulary). Coalescing follows DOC
+    # per-shard doc counts from the ledger. Coalescing follows DOC
     # RANGE order, not shard-id order: after an incremental
     # merge_shards the replacement shards live at high ids but cover
     # mid-range docs, and grouping by id would hand one worker
     # non-adjacent ranges (sparse WAND windows, overlapping range
     # routing).
-    counts, lows = {}, {}
-    for r in (store.segments(spark)
-              .filter(F.col("term") == DOCSTATS_TERM)
-              .groupBy("shard").agg(F.sum("n_docs").alias("nd"),
-                                    F.min("first_doc").alias("lo"))
-              .collect()):
-        counts[int(r["shard"])] = int(r["nd"])
-        lows[int(r["shard"])] = int(r["lo"])
+    ledger = store.ledger(meta)
     mapping = []  # (old_shard, new_shard)
     new_id, acc = 0, 0
-    for old in sorted(counts, key=lambda s: lows[s]):
+    for old in sorted(ledger, key=lambda s: ledger[s][0]):
         if acc >= per:
             new_id += 1
             acc = 0
         mapping.append((old, new_id))
-        acc += counts[old]
+        acc += ledger[old][2]
     n_new = new_id + 1
     map_df = spark.createDataFrame(mapping, "shard int, new_shard int")
 
@@ -1251,17 +1253,9 @@ def compact_index(spark: SparkSession, store: IndexStore, out_dir: str,
          .parquet(str(dst.path / "purged")))
 
     build_id = uuid.uuid4().hex
-    stats = (spark.read.parquet(str(dst.path / "segments"))
-             .groupBy("shard")
-             .agg(F.count("*").alias("rows"),
-                  (F.sum(F.length("doc_bytes")) + F.sum(F.length("tf_bytes"))
-                   + F.sum(F.length("dl_bytes"))).alias("bytes"),
-                  _digest_expr())
-             .collect())
-    manifest = {"shards": {str(int(r["shard"])): {
-        "status": "done", "rows": int(r["rows"]),
-        "bytes": int(r["bytes"] or 0), "digest": int(r["digest"]),
-        "build_id": build_id} for r in stats},
+    manifest = {"shards": _shard_entries(
+        spark.read.parquet(str(dst.path / "segments")), range(n_new),
+        build_id),
         # idempotence records survive compaction: a streaming sink
         # whose target is swapped to the compacted index must still
         # no-op replayed micro-batch tags (round-2 advice #4)

@@ -558,6 +558,10 @@ def encode_segments_from_tokens(tokens: DataFrame, doc_stats: DataFrame,
     the salt-ordered concatenation, merge is free). Cold terms default
     to one salt via the left join; the full vocabulary never leaves
     the executors.
+
+    The output also carries each shard's docstats pseudo rows, built
+    by ``docstats_rows`` from ``doc_stats`` — the same rows the
+    document-routed build emits, so both layouts record shard ranges.
     """
     spark = tokens.sparkSession
     hot = (tokens.groupBy("term").agg(F.count("*").alias("occ"))
@@ -626,4 +630,14 @@ def encode_segments_from_tokens(tokens: DataFrame, doc_stats: DataFrame,
         if buf is not None and len(buf):
             yield encode_pdf(buf)
 
-    return part.mapInPandas(run, schema=SEGMENT_SCHEMA)
+    def pseudo(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return docstats_rows(pdf["doc_id"].to_numpy(), pdf["dl"].to_numpy(),
+                             int(key[0]))
+
+    stats_rows = (doc_stats
+                  .withColumn("shard", ((F.col("doc_id") * F.lit(n_shards))
+                                        / F.lit(nd)).cast("int"))
+                  .groupBy("shard").applyInPandas(pseudo,
+                                                  schema=SEGMENT_SCHEMA))
+    return part.mapInPandas(run, schema=SEGMENT_SCHEMA).unionByName(
+        stats_rows)

@@ -474,82 +474,59 @@ def score_naive(spark: SparkSession, store: IndexStore, text: str,
 # block-max WAND (E10 primary path)
 # --------------------------------------------------------------------
 
-def _deletes_by_shard(spark: SparkSession, store: IndexStore,
-                      meta=None) -> DataFrame | None:
-    """Tombstoned doc_ids routed to their shard — (shard, doc_id), or
-    None when the index has no committed deletes (the common case: the
-    query plan is then byte-identical to a delete-free engine). Every
-    delete commit writes a shard-routed mirror beside its batch, so
-    this is a plain partition-pruned parquet scan — no range join, no
-    shard_doc_ranges job per query — and each shard worker receives
-    only ITS tombstones (Lucene's per-segment liveDocs shape)."""
-    meta = meta or store.meta()
-    if not meta.delete_batches:
-        return None
-    return store.deletes_routed(spark)
-
-
-def _del_array(right: pd.DataFrame) -> np.ndarray | None:
-    return np.sort(right["doc_id"].to_numpy().astype(np.int64)) \
-        if len(right) else None
-
-
 # Lucene keeps liveDocs RESIDENT per segment; the analogue here is a
-# broadcast of the (small) routed tombstone map instead of a per-query
-# cogroup exchange. Above this many tombstones (~4 MB of int64 ids)
-# queries fall back to the cogroup — bounded driver/executor memory,
-# and the measured cogroup cost at millions of tombstones is the
+# broadcast of a (small) per-shard id map instead of a per-query
+# cogroup exchange. Above this many ids (~2 MB of int64) a mask stays
+# a frame and rides the cogroup — bounded memory on both sides, and
+# the measured cogroup cost at millions of tombstones is the
 # documented merge-policy trigger anyway.
-DELETES_BROADCAST_MAX = int(__import__("os").environ.get(
-    "SYNSPARK_DELETES_BROADCAST_MAX", "262144"))
+DELETES_BROADCAST_MAX = 262144
+# resolved masks kept per store for the current commit (every doc_where
+# predicate of a serving loop, plus the tombstones)
+_MASK_CACHE_MAX = 64
 
 
-def _deletes_runtime(spark: SparkSession, store: IndexStore, meta=None):
-    """How this query applies tombstones:
-    - None: no committed deletes — plan identical to a delete-free
-      engine;
-    - ("map", Broadcast[{shard: sorted int64 ids}]): small tombstone
-      sets ride a Spark broadcast into the single-sided grouped map
-      (no cogroup, no second shuffle) — Lucene's resident liveDocs;
-      cached on the store per (build_id, delete commits), so serving
-      loops pay the one tiny collect once;
-    - ("df", DataFrame): large sets keep the routed-cogroup path.
-    """
-    meta = meta or store.meta()
-    if not meta.delete_batches:
-        return None
-    if meta.n_deleted <= DELETES_BROADCAST_MAX:
-        key = (meta.build_id, tuple(meta.delete_batches))
-        cached = getattr(store, "_dels_bcast", None)
-        if cached is not None and cached[0] == key:
-            return ("map", cached[1])
-        rows = _deletes_by_shard(spark, store, meta).collect()
+def _resolve_mask(spark: SparkSession, store: IndexStore, meta,
+                  key, frame_fn):
+    """One query mask — ``frame_fn()``'s (shard, doc_id) frame — as a
+    Broadcast[{shard: sorted int64 ids}] when it holds at most
+    DELETES_BROADCAST_MAX ids, else the frame itself (it then rides
+    the executor-to-executor cogroup). ONE job
+    decides the shape AND feeds the broadcast: a limit(MAX+1) collect.
+    Results live in one per-store cache keyed by ``key`` and cleared
+    when the commit (build_id, delete batches) changes, so a serving
+    loop pays each resolve once per commit."""
+    commit = (meta.build_id, tuple(meta.delete_batches))
+    cache = store._masks
+    if cache is None or cache[0] != commit:
+        cache = store._masks = (commit, {})
+    masks = cache[1]
+    if key in masks:
+        return masks[key]
+    frame = frame_fn()
+    rows = frame.limit(DELETES_BROADCAST_MAX + 1).collect()
+    if len(rows) <= DELETES_BROADCAST_MAX:
         m: dict[int, list] = {}
         for r in rows:
             m.setdefault(int(r["shard"]), []).append(int(r["doc_id"]))
-        bc = spark.sparkContext.broadcast(
+        frame = spark.sparkContext.broadcast(
             {s: np.sort(np.asarray(v, np.int64)) for s, v in m.items()})
-        store._dels_bcast = (key, bc)
-        return ("map", bc)
-    return ("df", _deletes_by_shard(spark, store, meta))
+    if len(masks) >= _MASK_CACHE_MAX:
+        masks.pop(next(iter(masks)))
+    masks[key] = frame
+    return frame
 
 
-def _allow_runtime(spark: SparkSession, store: IndexStore, meta,
-                   doc_where: str | None):
+def _allow_frame(spark: SparkSession, store: IndexStore,
+                 doc_where: str) -> DataFrame:
     """Doc-values filter (ES term/terms/range queries on keyword /
-    numeric metadata fields, run in the bool FILTER context): resolve
-    ``doc_where`` — a Spark SQL boolean expression over docmap columns
-    (repo, path, commit, lang, ...) — to a per-shard doc-id ALLOWLIST,
-    routed exactly like liveDocs (Lucene evaluates filters per segment
-    and intersects the bitset during scoring; this is that shape).
-
-    Returns None (no filter), ("map", Broadcast[{shard: sorted ids}])
-    for selective filters, or ("df", (shard, doc_id) DataFrame) for
-    large allowlists — which then ride the executor-to-executor
-    cogroup, never the driver. The docmap scan pushes ``doc_where``
-    into parquet (predicate pushdown on the metadata columns). Ids
-    route to their shard by a broadcast range join against the tiny
-    shard-range frame.
+    numeric metadata fields, run in the bool FILTER context): the ids
+    of docmap rows passing ``doc_where`` — a Spark SQL boolean
+    expression over docmap columns (repo, path, commit, lang, ...),
+    pushed into the parquet scan — routed to their shard by a
+    broadcast range join against the local ledger frame, exactly like
+    tombstones (Lucene evaluates filters per segment and intersects
+    the bitset during scoring; this is that shape).
 
     Scale note: allowlist volume is proportional to filter
     selectivity. A highly UNSELECTIVE filter (e.g. 20% of a 10^12-doc
@@ -558,112 +535,77 @@ def _allow_runtime(spark: SparkSession, store: IndexStore, meta,
     index-per-tenant idiom) or accept the one bounded shuffle of the
     cogroup path. Stale docmap rows (docs already purged by merges)
     are harmless here: an allow id with no postings simply never
-    matches.
-
-    Cached on the store per (build_id, docmap generation, predicate)
-    so serving loops pay the resolve once per commit."""
-    if doc_where is None:
-        return None
-    key = (meta.build_id, meta.n_docs, meta.n_purged,
-           tuple(meta.delete_batches), doc_where)
-    cached = getattr(store, "_allow_cache", None)
-    if cached is not None and cached[0] == key:
-        return cached[1]
+    matches."""
     ranges = store.shard_doc_ranges(spark)
-    routed = (store.docmap(spark).filter(doc_where).select("doc_id")
-              .join(F.broadcast(ranges),
-                    (F.col("doc_id") >= F.col("lo"))
-                    & (F.col("doc_id") <= F.col("hi")))
-              .select("shard", "doc_id"))
-    # ONE job decides the delivery shape AND feeds the broadcast: a
-    # limit(MAX+1) collect — a separate count() would recompute the
-    # id set just to learn its size. Only the rare over-budget set
-    # pays a second (cogroup-side) evaluation.
-    rows = routed.limit(DELETES_BROADCAST_MAX + 1).collect()
-    if len(rows) <= DELETES_BROADCAST_MAX:
-        m: dict[int, list] = {}
-        for r in rows:
-            m.setdefault(int(r["shard"]), []).append(int(r["doc_id"]))
-        rt = ("map", spark.sparkContext.broadcast(
-            {s: np.sort(np.asarray(v, np.int64)) for s, v in m.items()}))
-    else:
-        rt = ("df", routed)
-    store._allow_cache = (key, rt)
-    return rt
+    return (store.docmap(spark).filter(doc_where).select("doc_id")
+            .join(F.broadcast(ranges),
+                  (F.col("doc_id") >= F.col("lo"))
+                  & (F.col("doc_id") <= F.col("hi")))
+            .select("shard", "doc_id"))
 
 
 _EMPTY_IDS = np.zeros(0, np.int64)
+_NO_IDS = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                        "allow": pd.Series([], dtype=bool)})
 
 
 def _masked_apply(spark: SparkSession, store: IndexStore, meta,
                   blocks: DataFrame, fn, schema: str,
                   doc_where: str | None = None) -> DataFrame:
     """Shared shard-parallel runner for every match/score path: calls
-    ``fn(pdf, deleted, allowed)`` per shard with the liveDocs mask and
-    the optional ``doc_where`` allowlist (see _allow_runtime) routed
-    in. These two are the only query masks; query_string phrases are
-    verified inside the workers (QueryPlan.phrase_runs).
+    ``fn(pdf, deleted, allowed)`` per shard. The two query masks —
+    the routed tombstones (``store.deletes_routed``; None when nothing
+    is deleted, so a delete-free plan is byte-identical to a
+    delete-free engine) and the optional ``doc_where`` allowlist
+    (``_allow_frame``) — are resolved by ``_resolve_mask``; query_string
+    phrases are verified inside the workers (QueryPlan.phrase_runs).
 
-    Plan shapes (identical to the historical per-path code when no
-    filter is given, so delete-free plans stay byte-identical to a
-    delete-free engine):
-    - no mask needs a frame: single-sided grouped map, masks via 0-2
-      tiny broadcasts;
+    One worker body serves both plan shapes:
+    - every mask broadcast (or none): single-sided grouped map, the
+      worker called with an empty right side;
     - any mask too large to broadcast: ONE cogroup against the union
-      frame (shard, doc_id, allow) — flagged rows split back out in
-      the worker; the other mask may still ride its broadcast."""
-    rt = _deletes_runtime(spark, store, meta)
-    art = _allow_runtime(spark, store, meta, doc_where)
-    has_allow = art is not None
-    del_bc = rt[1] if rt is not None and rt[0] == "map" else None
-    al_bc = art[1] if has_allow and art[0] == "map" else None
-    rights = []
-    if rt is not None and rt[0] == "df":
-        rights.append(rt[1].select(
-            "shard", "doc_id", F.lit(False).alias("allow")))
-    if has_allow and art[0] == "df":
-        rights.append(art[1].select(
-            "shard", "doc_id", F.lit(True).alias("allow")))
+      of the frame masks (shard, doc_id, allow), split back out in the
+      worker; the other mask may still ride its broadcast."""
+    masks = {}
+    if meta.delete_batches:
+        masks["deleted"] = _resolve_mask(
+            spark, store, meta, ("deleted",),
+            lambda: store.deletes_routed(spark))
+    if doc_where is not None:
+        masks["allowed"] = _resolve_mask(
+            spark, store, meta, ("allowed", doc_where),
+            lambda: _allow_frame(spark, store, doc_where))
+    frames = [m.select("shard", "doc_id",
+                       F.lit(name == "allowed").alias("allow"))
+              for name, m in masks.items() if isinstance(m, DataFrame)]
+    bcs = {name: m for name, m in masks.items()
+           if not isinstance(m, DataFrame)}
+    names = list(masks)
 
-    if not rights:
-        def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            sh = int(key[0])
-            deleted = del_bc.value.get(sh) if del_bc is not None \
-                else None
-            # a filtered query's shard with no allow entries matches
-            # NOTHING — empty array, never None
-            allowed = (al_bc.value.get(sh, _EMPTY_IDS)
-                       if al_bc is not None else None)
-            return fn(pdf, deleted, allowed)
-
-        return _fanout(blocks).groupBy("shard").applyInPandas(
-            run, schema=schema)
-
-    right = rights[0]
-    for extra in rights[1:]:
-        right = right.unionByName(extra)
-
-    def run2(key, left: pd.DataFrame,
-             rp: pd.DataFrame) -> pd.DataFrame:
+    def run(key, left: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
         sh = int(key[0])
-        if del_bc is not None:
-            deleted = del_bc.value.get(sh)
-        elif rt is not None:
-            deleted = _del_array(rp[~rp["allow"]] if len(rp) else rp)
-        else:
-            deleted = None
-        if not has_allow:
-            allowed = None
-        elif al_bc is not None:
-            allowed = al_bc.value.get(sh, _EMPTY_IDS)
-        else:
-            a = rp[rp["allow"]] if len(rp) else rp
-            allowed = np.sort(a["doc_id"].to_numpy().astype(np.int64))
-        return fn(left, deleted, allowed)
+        # a filtered query's shard with no allow entries matches
+        # NOTHING — empty array, never None
+        ids = {}
+        for name in names:
+            if name in bcs:
+                ids[name] = bcs[name].value.get(sh, _EMPTY_IDS)
+            else:
+                sel = rp["doc_id"][rp["allow"] == (name == "allowed")]
+                ids[name] = np.sort(sel.to_numpy().astype(np.int64))
+        deleted = ids.get("deleted")
+        return fn(left, deleted if deleted is not None and len(deleted)
+                  else None, ids.get("allowed"))
 
+    if not frames:
+        return _fanout(blocks).groupBy("shard").applyInPandas(
+            lambda key, pdf: run(key, pdf, _NO_IDS), schema=schema)
+    right = frames[0]
+    for extra in frames[1:]:
+        right = right.unionByName(extra)
     return (_fanout(blocks).groupBy("shard")
             .cogroup(_fanout(right).groupBy("shard"))
-            .applyInPandas(run2, schema=schema))
+            .applyInPandas(run, schema=schema))
 
 
 def _fanout(df: DataFrame, key: str = "shard") -> DataFrame:
@@ -1297,7 +1239,7 @@ def search(spark: SparkSession, store: IndexStore, text: str, k: int = 10,
     Matching docs are restricted to the filter's allowlist BEFORE
     heap admission (never scores, never affects idf/avgdl — exactly
     ES: filters don't change scoring stats), routed per shard like
-    liveDocs (see _allow_runtime for the scale shape).
+    liveDocs (see _allow_frame for the scale shape).
 
     ``min_score`` is the ES search-body parameter: hits scoring
     below the floor drop out. Applied as a filter on the top-k

@@ -64,8 +64,9 @@ def snapshot(store: IndexStore, dest: str) -> dict:
     """Copy the store's CURRENT COMMIT to ``dest`` (same filesystem
     shim). Incremental: files already in ``dest`` with matching size
     are skipped — immutable-once-committed makes (name, size) a safe
-    identity. Crash-safe: data first, manifest, then meta.json LAST;
-    a torn snapshot has no meta and cannot be opened (IndexStore.meta
+    identity — and data files the source does not hold are removed.
+    Crash-safe: data first, manifest, then meta.json LAST; a torn
+    snapshot has no meta and cannot be opened (IndexStore.meta
     raises). Skips temp files (.tmp., _SUCCESS, .crc noise).
 
     Returns {"files_copied": n, "files_skipped": m} — the second
@@ -93,6 +94,7 @@ def snapshot(store: IndexStore, dest: str) -> dict:
     dst_root = FsPath(store.fs, dest)
     dst_root.mkdir(parents=True, exist_ok=True)
     copied = skipped = 0
+    keep = set()
     for sub in _DATA_DIRS:
         src_dir = store.path / sub
         for f in _walk_files(src_dir):
@@ -100,6 +102,7 @@ def snapshot(store: IndexStore, dest: str) -> dict:
             if ".tmp." in name or name.startswith("."):
                 continue
             rel = _rel(store.path, f)
+            keep.add(rel)
             dst = dst_root
             for part in rel.split("/"):
                 dst = dst / part
@@ -112,6 +115,14 @@ def snapshot(store: IndexStore, dest: str) -> dict:
             parent.mkdir(parents=True, exist_ok=True)
             f.copy_to(dst)
             copied += 1
+    # the destination mirrors this commit: a file the source does not
+    # hold (e.g. left by a snapshot of ANOTHER store into a reused
+    # destination) could sit in a partition this meta commits and be
+    # read as its data
+    for sub in _DATA_DIRS:
+        for f in _walk_files(dst_root / sub):
+            if _rel(dst_root, f) not in keep:
+                f.unlink()
     if manifest_text is not None:
         (dst_root / "manifest.json").write_text(manifest_text)
     (dst_root / "meta.json").write_text(meta_text)  # the commit point

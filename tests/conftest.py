@@ -15,3 +15,24 @@ def spark():
                   shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def assert_ledger(spark):
+    """Check a store's manifest ledger (``IndexStore.ledger``) against
+    the pseudo-row oracle: per live shard, the min first_doc, max
+    last_doc and summed n_docs of its docstats pseudo rows."""
+    from pyspark.sql import functions as F
+
+    from synspark.indexer import DOCSTATS_TERM
+
+    def check(store):
+        oracle = {int(r.shard): (r.lo, r.hi, r.docs) for r in
+                  store.segments(spark)
+                  .filter(F.col("term") == DOCSTATS_TERM)
+                  .groupBy("shard")
+                  .agg(F.min("first_doc").alias("lo"),
+                       F.max("last_doc").alias("hi"),
+                       F.sum("n_docs").alias("docs")).collect()}
+        assert oracle and store.ledger() == oracle
+    return check

@@ -48,7 +48,7 @@ def _topk(spark, store, text="data sort", k=10, **kw):
             for r in search(spark, store, text, k=k, **kw).collect()]
 
 
-def test_delete_excludes_hits_keeps_scores(spark, idx):
+def test_delete_excludes_hits_keeps_scores(spark, idx, assert_ledger):
     store, root = idx
     pre = _topk(spark, store)
     pre_cnt = count_matches(spark, store, "data sort") \
@@ -58,6 +58,7 @@ def test_delete_excludes_hits_keeps_scores(spark, idx):
 
     meta = store.meta()
     assert meta.n_deleted == 2 and meta.delete_batches == ["del-0"]
+    assert_ledger(store)
     # n_docs / avgdl / df untouched (Lucene keeps stats until merge)
     assert meta.n_docs == 200
 
@@ -115,13 +116,14 @@ def test_delete_by_keys_and_lock(spark, idx):
         store.release_writer_lock()
 
 
-def test_purge_equals_fresh_build(spark, idx):
+def test_purge_equals_fresh_build(spark, idx, assert_ledger):
     store, root = idx
     dead = sorted(r.doc_id for r in store.deletes(spark).collect())
     dst = compact_index(spark, store, str(root / "purged"))
     meta = dst.meta()
     assert meta.n_deleted == 0 and meta.delete_batches == []
     assert meta.n_docs == 200 - len(dead)
+    assert_ledger(dst)
     # dense renumbering: docmap ids are exactly 0..n_live-1
     ids = sorted(r.doc_id for r in dst.docmap(spark).collect())
     assert ids == list(range(meta.n_docs))
@@ -180,7 +182,8 @@ def test_append_after_delete_then_purge(spark, tmp_path_factory):
     assert ids == list(range(77))
 
 
-def test_upsert_replaces_by_key_and_inserts(spark, tmp_path_factory):
+def test_upsert_replaces_by_key_and_inserts(spark, tmp_path_factory,
+                                           assert_ledger):
     root = tmp_path_factory.mktemp("upsert")
     store = build_index(spark, _corpus(spark, n=40), str(root / "idx"),
                         cfg=CFG, n_shards=2, resume=False)
@@ -193,6 +196,7 @@ def test_upsert_replaces_by_key_and_inserts(spark, tmp_path_factory):
     meta = store.meta()
     assert meta.n_docs == 42          # id space grew by the 2 new docs
     assert meta.n_deleted == 1        # old r000 tombstoned, rNEW inserted
+    assert_ledger(store)
     assert len(search(spark, store, "zebra", k=5).collect()) == 1
     # the old r000 content no longer matches anything
     assert count_matches(spark, store, "unique0 ").collect()[0].hits == 0
@@ -291,7 +295,6 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     from dataclasses import asdict
 
     from synspark.index_store import IndexMeta
-    from synspark.query import _deletes_by_shard
 
     root = tmp_path_factory.mktemp("del_plan")
     store = build_index(spark, _corpus(spark, n=80), str(root / "idx"),
@@ -299,7 +302,7 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     delete_docs(spark, store, doc_ids=[1, 5, 9])
 
     # fast path: joinless pruned scan of the write-time-routed mirror
-    dels = _deletes_by_shard(spark, store)
+    dels = store.deletes_routed(spark)
     plan = dels._jdf.queryExecution().executedPlan().toString()
     assert "deletes_routed" in plan
     assert "Join" not in plan and "Exchange" not in plan
@@ -314,7 +317,7 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     store._write_meta(IndexMeta(**{**asdict(meta),
                                    "routed_batches": []}))
     with pytest.raises(ValueError, match=r"\['del-0'\].*no shard-routed"):
-        _deletes_by_shard(spark, store)
+        store.deletes_routed(spark)
 
 
 def test_match_ids_and_delete_by_query(spark, tmp_path_factory):

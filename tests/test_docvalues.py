@@ -83,15 +83,39 @@ def test_filter_cogroup_path_identical(spark, store, monkeypatch):
     w = "lang = 'java'"
     base = _rows(search(spark, store, "data sort", k=15, doc_where=w))
     monkeypatch.setattr(q, "DELETES_BROADCAST_MAX", 0)
-    store._allow_cache = None
+    store._masks = None
     got = _rows(search(spark, store, "data sort", k=15, doc_where=w))
     assert got == base
     n = count_matches(spark, store, "data sort",
                       doc_where=w).collect()[0].hits
     monkeypatch.undo()
-    store._allow_cache = None
+    store._masks = None
     assert n == count_matches(spark, store, "data sort",
                               doc_where=w).collect()[0].hits
+
+
+def test_filter_job_shape(spark, store):
+    """Every doc_where predicate of the current commit stays resolved:
+    alternating three predicates, a repeated one runs exactly the jobs
+    of the unfiltered query (no range, docmap or collect job)."""
+    sc = spark.sparkContext
+    preds = ["lang = 'java'", "lang = 'py'", "repo = 'repo3'"]
+
+    def jobs(tag, w):
+        group = f"test-filter-job-shape-{tag}"
+        sc.setJobGroup(group, "doc_where job-shape guard")
+        try:
+            search(spark, store, "data sort", k=5, doc_where=w).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for w in [None] + preds:                 # warm df memo + masks
+        search(spark, store, "data sort", k=5, doc_where=w).collect()
+    base = jobs("none", None)
+    for i, w in enumerate(preds + preds):
+        assert jobs(i, w) == base, w
 
 
 def test_filter_empty_allowlist(spark, store):
@@ -139,12 +163,12 @@ def test_filter_composes_with_deletes_and_merge(spark, store,
     before = _rows(search(spark, s2, "data sort", k=10, doc_where=w))
     victim = before[0][0]
     delete_docs(spark, s2, doc_ids=[victim])
-    s2._allow_cache = None
+    s2._masks = None
     after = _rows(search(spark, s2, "data sort", k=10, doc_where=w))
     assert victim not in [d for d, _ in after]
     assert after[0] == before[1]
     merge_shards(spark, s2, min_deleted_fraction=0.0)
-    s2._allow_cache = None
+    s2._masks = None
     merged = _rows(search(spark, s2, "data sort", k=10, doc_where=w))
     assert [d for d, _ in merged] == [d for d, _ in after]
     naive = _rows(score_naive(spark, s2, "data sort", k=10,

@@ -40,7 +40,7 @@ def merged(spark, tmp_path_factory):
     return store, root
 
 
-def test_merge_selective_state(spark, merged):
+def test_merge_selective_state(spark, merged, assert_ledger):
     store, _ = merged
     m = store.meta()
     assert m.dead_shards == [1]
@@ -54,6 +54,7 @@ def test_merge_selective_state(spark, merged):
     assert man["shards"]["0"]["status"] == "done"
     # replacement shard present with rows
     assert man["shards"]["4"]["rows"] > 0
+    assert_ledger(store)
 
 
 def test_merge_query_semantics(spark, merged):

@@ -60,7 +60,6 @@ def test_grep_fallback_pushes_doc_where(spark, pstore):
 
 
 def test_query_string_meta_pushdown(spark, pstore):
-    from synspark.query import _allow_runtime
     store, _corpus = pstore
     # the compiled doc_where reaches the docmap parquet scan as a
     # pushed filter (same gate as test_docvalues, via query_string's

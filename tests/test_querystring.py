@@ -232,7 +232,7 @@ def test_df_routed_gates(spark, qst, monkeypatch):
     monkeypatch.setattr(Q, "DELETES_BROADCAST_MAX", -1)
     # the broadcast allowlist is cached per commit; drop it so the
     # second run really resolves the over-budget (cogroup) shape
-    monkeypatch.setattr(qst, "_allow_cache", None, raising=False)
+    monkeypatch.setattr(qst, "_masks", None, raising=False)
     got = _pairs(query_string(
         spark, qst, 'data "key order" -"slow scan" lang:en', k=50))
     assert got == want and got

@@ -239,13 +239,13 @@ def test_wand_window_is_plan_carried(spark, merged):
         .select("term", "shard", "first_doc", "last_doc", "n_docs",
                 "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
                 "pos_bytes", "pl_bytes").toPandas()
-    from synspark.query import _deletes_by_shard, _del_array
-    dels = _deletes_by_shard(spark, store).toPandas()
+    import numpy as np
+    dels = store.deletes_routed(spark).toPandas()
     out = []
     for shard, pdf in blocks.groupby("shard"):
-        d = dels[dels["shard"] == shard]
+        d = np.sort(dels["doc_id"][dels["shard"] == shard].to_numpy())
         res = _wand_shard(pdf.reset_index(drop=True), tiny, 10, "and",
-                          deleted=_del_array(d) if len(d) else None)
+                          deleted=d if len(d) else None)
         out.extend([(int(r.doc_id), float(r.score))
                     for r in res.itertuples(index=False)])
     out = sorted(out, key=lambda x: (-x[1], x[0]))[:10]

@@ -115,10 +115,9 @@ def test_percolate_spread_partitions(spark):
 
 
 def test_simhash_first_combo_emission(spark):
-    """Round 6b: at small combo counts the blocked self-join emits each
-    surviving pair ONLY from its first colliding combo table — one
-    output row per pair with no dedup exchange in the plan; the wide-C
-    parameterization keeps the classic distinct fallback."""
+    """The blocked self-join emits each surviving pair ONLY from its
+    first colliding combo table — one output row per pair with no
+    dedup aggregate in the plan, at any combo count."""
     from synspark.datapipe.dedup import simhash_near_dups
 
     # sigs 5 and 4 differ in bit 0 only: block 0 corrupt, blocks 1-3
@@ -130,7 +129,7 @@ def test_simhash_first_combo_emission(spark):
     assert [(r["a"], r["b"], r["hamming"]) for r in rows] == [(1, 2, 1)]
 
     # plan shape: default C(4,1)=4 -> no aggregate-based distinct, just
-    # the two join exchanges; C(6,3)=20 -> distinct fallback present
+    # the two join exchanges; C(6,3)=20 -> no aggregate either
     def plan(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
@@ -138,9 +137,21 @@ def test_simhash_first_combo_emission(spark):
     assert "HashAggregate" not in p_fast
     assert p_fast.count("Exchange") <= 2 * p_fast.count("SortMergeJoin") \
         or "BroadcastHashJoin" in p_fast
-    p_wide = plan(simhash_near_dups(sim, max_hamming=3, n_blocks=6,
-                                    blocks_per_key=3))
-    assert "HashAggregate" in p_wide
+    wide = simhash_near_dups(sim, max_hamming=3, n_blocks=6,
+                             blocks_per_key=3)
+    assert "HashAggregate" not in plan(wide)
+
+    # C=20 on signatures colliding in many combo tables: no duplicate
+    # rows, and the same pair set as C=4
+    sigs = [0, 1, 3, 1 << 20, (1 << 40) | 1, 7, 0x0FFF0FFF0FFF0FFF,
+            0x0FFF0FFF0FFF0FFE, -(1 << 63) | 1]
+    sim2 = spark.createDataFrame(list(enumerate(sigs)),
+                                 "doc_id long, simhash long")
+    got = [tuple(r) for r in simhash_near_dups(
+        sim2, max_hamming=3, n_blocks=6, blocks_per_key=3).collect()]
+    assert len(got) == len(set(got)) > 5
+    assert set(got) == {tuple(r) for r in
+                        simhash_near_dups(sim2, max_hamming=3).collect()}
 
 
 def test_simhash_hot_bucket_grid(spark):

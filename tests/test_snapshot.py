@@ -48,6 +48,14 @@ def test_snapshot_restore_identical_and_incremental(spark, tmp_path):
     s2 = snapshot(store, str(tmp_path / "snap"))
     assert s2["files_copied"] == 0
     assert s2["files_skipped"] == s1["files_copied"]
+    # a file the source does not hold (another store's leftovers in a
+    # reused destination) is removed, not read as this commit's data
+    import shutil
+    shard0 = tmp_path / "snap" / "segments" / "shard=0"
+    seg = next(shard0.glob("*.parquet"))
+    shutil.copy(seg, shard0 / "part-stale.parquet")
+    snapshot(store, str(tmp_path / "snap"))
+    assert not (shard0 / "part-stale.parquet").exists()
     rst = restore(str(tmp_path / "snap"), str(tmp_path / "restored"))
     assert _topk(spark, rst) == _topk(spark, store)
     # zero-copy restore: opening the snapshot dir directly

@@ -314,7 +314,7 @@ def test_deterministic_rebuild(spark, corpus, tmp_path_factory):
 
 
 def test_resume_after_partial_failure(spark, corpus, index,
-                                      tmp_path_factory):
+                                      tmp_path_factory, assert_ledger):
     """Simulate a crash that lost two shards: wipe their partitions +
     manifest entries; resumed build recomputes ONLY those and the
     digests match the original (byte-identical resume)."""
@@ -336,12 +336,16 @@ def test_resume_after_partial_failure(spark, corpus, index,
                       n_shards=4, source="resume-test", resume=True)
     after = {k: v["digest"] for k, v in st2.manifest()["shards"].items()}
     assert after == orig
+    assert_ledger(st2)
 
 
 def test_term_layout_equivalent(spark, corpus, index, tmp_path_factory):
     """layout='term' (salted repartition-by-term, north-star E5) must
     produce identical decoded postings and identical query results to
-    the default document-routed layout."""
+    the default document-routed layout — doc_where filters and
+    tombstones included, which route through the shard ranges both
+    layouts record."""
+    from synspark.deletes import delete_docs
     syn = SynonymDict.parse(JP_DICT)
     out = tmp_path_factory.mktemp("termidx") / "index"
     st2 = build_index(spark, corpus, str(out), cfg=CFG2, syn=syn,
@@ -357,6 +361,20 @@ def test_term_layout_equivalent(spark, corpus, index, tmp_path_factory):
         rb = [(r["doc_id"], round(r["score"], 9)) for r in
               search(spark, st2, q, k=10, syn=syn).collect()]
         assert ra == rb, q
+    assert st2.ledger() == index.ledger()
+    w = "lang = 'python'"
+    ra = [(r["doc_id"], round(r["score"], 9)) for r in
+          search(spark, index, "in re", k=10, syn=syn,
+                 doc_where=w).collect()]
+    rb = [(r["doc_id"], round(r["score"], 9)) for r in
+          search(spark, st2, "in re", k=10, syn=syn,
+                 doc_where=w).collect()]
+    assert ra == rb and ra
+    top = rb[0][0]
+    delete_docs(spark, st2, doc_ids=[top])
+    assert top not in [r["doc_id"] for r in
+                       search(spark, st2, "in re", k=10,
+                              syn=syn).collect()]
 
 
 def test_term_layout_no_driver_vocab(spark, corpus, monkeypatch):
@@ -401,7 +419,7 @@ def test_search_batch_rank_identical(spark, index):
         assert got.get(qi, []) == single, t
 
 
-def test_append_to_index(spark, tmp_path_factory):
+def test_append_to_index(spark, tmp_path_factory, assert_ledger):
     """Incremental append == full rebuild: same decoded postings, same
     query results, updated global stats."""
     from synspark.index_store import append_to_index
@@ -428,6 +446,7 @@ def test_append_to_index(spark, tmp_path_factory):
                          .withColumnRenamed("x", "doc_id"), source="extra")
     assert st.meta().n_docs == 200
     assert st.meta().n_shards > 3
+    assert_ledger(st)
 
     out_b = tmp_path_factory.mktemp("full") / "index"
     st_full = build_index(spark, full, str(out_b), cfg=cfg, n_shards=3,
@@ -532,7 +551,7 @@ def test_fold_java_parity():
     assert d.longest_match_end("İnfoX", 0) == 4
 
 
-def test_compact_index(spark, tmp_path_factory):
+def test_compact_index(spark, tmp_path_factory, assert_ledger):
     """Compaction (forceMerge analogue): many append-born small shards
     -> few doc-range shards, identical decoded postings and queries."""
     from synspark.index_store import append_to_index, compact_index
@@ -559,6 +578,7 @@ def test_compact_index(spark, tmp_path_factory):
                                        / "index"), docs_per_shard=75)
     assert dst.meta().n_shards < st.meta().n_shards
     assert dst.meta().n_docs == st.meta().n_docs == 150
+    assert_ledger(dst)
     terms = [r["term"] for r in st.termstats(spark).collect()]
     a = sorted(map(tuple, decoded_postings(spark, st, terms).collect()))
     b = sorted(map(tuple, decoded_postings(spark, dst, terms).collect()))
